@@ -16,17 +16,25 @@ Two implementations:
   dedup and first-visit (min-step) semantics. Use for engines without
   recursive CTEs, or when cycle-heavy data makes all-paths enumeration
   explode before the step bound (the loop's visited-set makes each node
-  expand at most once per seed).
+  expand at most once per seed). Its rounds run through
+  operators/rounds.py, one job per level.
 
 Scale notes: the edge table of a real hierarchy (WikiData admin tree,
 ~1e6 edges) is broadcast-small next to the seed set; with broadcast edges
-each CTE iteration / loop level is shuffle-free on the frontier side.
+each CTE iteration is shuffle-free on the frontier side (the loop leaves
+the join strategy to AQE).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geo_db_spark.operators.rounds import checkpoint_round, fixpoint
+
+# the loop's accumulated result is checkpointed every this many steps,
+# so its union chain never re-derives more than a few levels
+_RESULT_CHECKPOINT_EVERY = 4
 
 
 def transitive_closure(
@@ -91,42 +99,33 @@ def transitive_closure_loop(
     child_col: str = "id",
     parent_col: str = "parent",
     seed_col: str = "id",
-    broadcast_edges: bool = False,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Iterative-join closure with first-visit semantics: each (seed, id)
     is recorded at its minimal step and never re-expanded — terminates on
     cycles without enumerating paths. Deterministic, cycle-safe."""
     e = edges.select(F.col(child_col).alias("__c"), F.col(parent_col).alias("__p"))
-    if broadcast_edges:
-        e = F.broadcast(e)
-
     frontier = (
         seeds.select(F.col(seed_col).alias("seed")).distinct().withColumn("id", F.col("seed"))
     )
     result = frontier.withColumn("step", F.lit(0)).localCheckpoint(eager=True)
-    frontier = result.select("seed", "id")
 
-    step = 0
-    while step < max_steps:
-        step += 1
-        nxt = (
+    def step(state, n):
+        frontier, result = state
+        nxt, row = checkpoint_round(
             frontier.join(e, frontier["id"] == e["__c"], "inner")
             .select("seed", F.col("__p").alias("id"))
             .dropDuplicates(["seed", "id"])
-            .join(result.select("seed", "id"), ["seed", "id"], "left_anti")
-            # lazy: the emptiness probe below is the job that
-            # materializes the round (components.py pattern — one job
-            # per round, not an eager materialize plus a probe re-scan)
-            .localCheckpoint(eager=False)
+            .join(result.select("seed", "id"), ["seed", "id"], "left_anti"),
+            lambda d: d.agg(F.count(F.lit(1))),
         )
-        if nxt.count() == 0:
-            break
-        frontier = nxt
-        result = result.unionByName(nxt.withColumn("step", F.lit(step)))
-        if checkpoint_every and step % checkpoint_every == 0:
+        if row[0] == 0:
+            return state, True
+        result = result.unionByName(nxt.withColumn("step", F.lit(n)))
+        if n % _RESULT_CHECKPOINT_EVERY == 0:
             result = result.localCheckpoint(eager=True)
-    return result
+        return (nxt, result), False
+
+    return fixpoint(step, (result.select("seed", "id"), result), max_steps)[1]
 
 
 def transitive_closure_doubling(
@@ -162,9 +161,9 @@ def transitive_closure_doubling(
         .withColumn("step", F.lit(1))
         .localCheckpoint(eager=True)
     )
-    rounds = max(1, math.ceil(math.log2(max(2, int(max_steps)))) + 1)
-    prev: tuple | None = None
-    for _ in range(rounds):
+
+    def step(state, _n):
+        R, prev = state
         a = R.select("src", F.col("dst").alias("mid"), F.col("step").alias("s1"))
         b = R.select(F.col("src").alias("mid"), "dst", F.col("step").alias("s2"))
         comp = (
@@ -172,21 +171,14 @@ def transitive_closure_doubling(
             .select("src", "dst", (F.col("s1") + F.col("s2")).alias("step"))
             .filter(F.col("step") <= max_steps)
         )
-        R = (
-            R.unionByName(comp)
-            .groupBy("src", "dst")
-            .agg(F.min("step").alias("step"))
-            # lazy: the fixpoint-signature aggregate below materializes
-            # the round in the same job (components.py pattern); the
-            # self-join consumers of the NEXT round then read the cached
-            # rows, never the lineage
-            .localCheckpoint(eager=False)
+        R, sig = checkpoint_round(
+            R.unionByName(comp).groupBy("src", "dst").agg(F.min("step").alias("step")),
+            lambda d: d.agg(F.count(F.lit(1)), F.sum("step")),
         )
-        row = R.agg(F.count(F.lit(1)).alias("n"), F.sum("step").alias("s")).collect()[0]
-        sig = (row["n"], row["s"])
-        if sig == prev:
-            break
-        prev = sig
+        return (R, sig), sig == prev
+
+    rounds = max(1, math.ceil(math.log2(max(2, int(max_steps)))) + 1)
+    R, _ = fixpoint(step, (R, None), rounds)
     sd = seeds.select(F.col(seed_col).alias("seed")).distinct()
     anc = sd.join(R, sd["seed"] == R["src"]).select(
         "seed", F.col("dst").alias("id"), "step"

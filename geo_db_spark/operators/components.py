@@ -15,7 +15,8 @@ propagation needs O(diameter) rounds — a 1M-doc boilerplate chain would
 take 1M shuffles; the jump makes label trees halve each round, so
 convergence is O(log diameter) rounds of pure equi-joins. Convergence
 is detected by the (monotonically decreasing) SUM of labels going
-stable — one cheap 1-row aggregate per round, no row-wise diff join.
+stable — one cheap 1-row aggregate per round, no row-wise diff join;
+the rounds run through operators/rounds.py.
 
 All joins are hash equi-joins keyed on node id / label; nothing is ever
 all-pairs, and per-round state is (id, label) pairs only — at 100 TB
@@ -26,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geo_db_spark.operators.rounds import checkpoint_round, fixpoint
 
 
 def connected_components(
@@ -42,23 +45,16 @@ def connected_components(
     back if they need total coverage; see workload/dedup.dedup_clusters).
     """
     e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    # Materialize the symmetric edge list FIRST, then derive nodes /
-    # self-loops / labels from the checkpointed rows. The previous order
-    # built `nodes` off the un-checkpointed union, so the labels
-    # materialization re-ran the ENTIRE upstream pair computation a
-    # second time — for simjoin-fed CC that was +4.7 s of a 15.5 s wall
-    # at sf0.1 (the pair join is far heavier than the edges it emits).
-    # r14: the setup frames are LAZY checkpoints — sym0 is computed (and
-    # persisted) by sym's mark-time exchange stages, sym's result stage
-    # rides round 1's job, and there is no separate labels frame at all
-    # (see below). The eager form paid three setup jobs plus a sum
-    # re-scan before the first round.
+    # Materialize the symmetric edge list FIRST and derive nodes,
+    # self-loops and labels from its rows: built off the un-checkpointed
+    # union, every later job would re-run the whole upstream pair
+    # computation (for simjoin-fed CC that was +4.7 s of a 15.5 s wall
+    # at sf0.1 — the pair join is far heavier than the edges it emits).
     sym0 = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=False)
     # self-loops fold the "own label" term into the neighbor-min groupBy,
     # so each round is ONE join + groupBy (propagate) + one join (jump)
-    # instead of carrying a separate least(own, nbr) re-join of `labels`
     nodes = sym0.select(F.col("a").alias("id")).distinct()
     sym = (
         sym0.unionByName(nodes.select(F.col("id").alias("a"), F.col("id").alias("b")))
@@ -66,18 +62,11 @@ def connected_components(
         .localCheckpoint(eager=False)  # edge list is iterated: materialize once
     )
 
-    # r14: round 1 runs against IDENTITY labels (label == id), so the
-    # label join only renames a column — sym.groupBy(b).min(a) is the
-    # same frame with no join and no materialized labels seed. The old
-    # initial-sum probe is gone with it; convergence starts comparing at
-    # round 2 (the sentinel can never equal a sum), which only costs an
-    # extra (empty-delta) round on inputs that are already converged —
-    # i.e. graphs with no non-self edge, where the rounds are trivial.
-    labels = None
-    prev_sum: object = ()  # sentinel: sums are int | None, never ()
-    converged = False
-    for _ in range(max_iters):
+    def step(state, n):
+        labels, prev_sum = state
         if labels is None:
+            # round 1 runs against IDENTITY labels (label == id), so the
+            # label join would only rename a column
             stepped = sym.groupBy(F.col("b").alias("id")).agg(
                 F.min("a").alias("label")
             )
@@ -89,35 +78,31 @@ def connected_components(
             )
         # pointer jump: a label is itself a node id, so its own current
         # label exists in `stepped`; one extra hop halves label-tree
-        # depth. (A second hop per round was tried in r7 and measured
-        # NOT to reduce the round count — after the jump the label trees
-        # are already shallow; rounds are bound by edge-propagation
-        # distance, which only the groupBy advances — so it was dropped.)
+        # depth. (A second hop per round was measured NOT to reduce the
+        # round count: rounds are bound by edge-propagation distance,
+        # which only the groupBy advances.)
         hop = stepped.select(F.col("id").alias("jid"), F.col("label").alias("jl"))
-        # LAZY checkpoint + let the convergence aggregate be the action
-        # that materializes it: one Spark job per round instead of two
-        # (the eager materialization and the sum re-scan were separate
-        # jobs; at any data size the round's wall has a fixed multi-job
-        # latency floor, and at scale this also halves the driver's
-        # round-trip count)
-        jumped = (
-            stepped.join(hop, stepped["label"] == hop["jid"], "left")
-            .select("id", F.coalesce(F.col("jl"), F.col("label")).alias("label"))
-            .localCheckpoint(eager=False)
+        jumped = stepped.join(hop, stepped["label"] == hop["jid"], "left").select(
+            "id", F.coalesce(F.col("jl"), F.col("label")).alias("label")
         )
-        cur_sum = jumped.agg(F.sum("label")).collect()[0][0]
-        labels = jumped
-        if cur_sum == prev_sum:  # sentinel () on round 1: never equal
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # silently returning non-minimal labels would be a wrong answer
-        # that still LOOKS like clusters; with pointer jumping max_iters
-        # rounds cover diameters ~2^max_iters, so hitting this means the
-        # caller set max_iters far too low for the graph
-        raise RuntimeError(
+        # labels only ever decrease, so an unchanged SUM means unchanged
+        # labels. Round 1's probe also sums the ids — the identity
+        # labels' sum — so an already-converged graph stops at round 1.
+        aggs = [F.sum("label")] + ([F.sum("id")] if n == 1 else [])
+        jumped, row = checkpoint_round(jumped, lambda d: d.agg(*aggs))
+        if n == 1:
+            prev_sum = row[1]
+        return (jumped, row[0]), row[0] == prev_sum
+
+    # silently returning non-minimal labels would be a wrong answer
+    # that still LOOKS like clusters; with pointer jumping max_iters
+    # rounds cover diameters ~2^max_iters, so hitting the limit means
+    # the caller set max_iters far too low for the graph
+    labels, _ = fixpoint(
+        step, (None, None), max_iters,
+        limit_error=RuntimeError(
             f"connected_components did not converge in {max_iters} rounds; "
             "raise max_iters (rounds needed ~ log2(graph diameter))"
-        )
+        ),
+    )
     return labels.select(F.col("id"), F.col("label").alias("cluster_id"))

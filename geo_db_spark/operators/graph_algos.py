@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geo_db_spark.operators.rounds import checkpoint_round, fixpoint
+
 PR_SCALE = 10**12
 
 
@@ -37,52 +39,35 @@ def pagerank_fixedpoint(
     g13 contract (both engines run the same fixed-round algorithm, so
     parity is exact regardless of convergence).
 
-    ``iterations=None`` (r8 verdict next #4, the house fixpoint pattern
-    from k-core/SSSP) iterates until a round changes NO node's rank —
+    ``iterations=None`` iterates until a round changes NO node's rank —
     an EXACT fixpoint, which integer arithmetic makes well-defined:
     once every per-node update lands on the same BIGINT, all later
-    rounds are the identity. The probe is one bounded driver scalar per
-    round (count of changed (id, rank) pairs — the emptiness probe on a
-    checkpointed frame, so nothing re-runs prior rounds). Deltas shrink
-    ~0.85x per round, so the fixpoint lands around
-    log(base)/log(1/0.85) ≈ 110-170 rounds at PR_SCALE=1e12 — use it
-    for correctness-critical ranks, not for the 5-round demo wall;
-    ``max_iterations`` raises rather than spin if the integer dynamics
-    ever enter a >1-cycle instead of a fixpoint.
+    rounds are the identity. Each round's probe counts the changed
+    (id, rank) pairs. Deltas shrink ~0.85x per round, so the fixpoint
+    lands around log(base)/log(1/0.85) ≈ 110-170 rounds at
+    PR_SCALE=1e12; ``max_iterations`` raises rather than spin if the
+    integer dynamics ever enter a >1-cycle instead of a fixpoint.
     """
     if iterations is None and max_iterations < 1:
         raise ValueError(f"need max_iterations >= 1: got {max_iterations}")
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    # r13: lazy checkpoints; the node-count guard below materializes
-    # `nodes` in the same job (components.py probe pattern), and `ed`
-    # rides inside the first job that consumes it — lineage truncation
-    # (each loop frame starts from materialized-or-marked rows, never a
-    # growing plan) is unchanged
-    nodes = (
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    # `ed` rides inside the first job that consumes it; the node count
+    # is the job that materializes `nodes`
+    ed = e.join(deg, "src").localCheckpoint(eager=False)
+    nodes, row = checkpoint_round(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        lambda d: d.agg(F.count(F.lit(1))),
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    ed = e.join(deg, "src").localCheckpoint(eager=False)
-
-    n = nodes.count()
+    n = row[0]
     if n == 0:
         return nodes.select("id", F.lit(0).cast("long").alias("rank_fp"))
     base = PR_SCALE // n
     teleport = (base * (100 - damping_pct)) // 100
 
-    ranks = nodes.withColumn("r", F.lit(base).cast("long"))
-    converge = iterations is None
-    r_no = 0
-    while converge or r_no < iterations:
-        r_no += 1
-        if converge and r_no > max_iterations:
-            raise ValueError(
-                f"PageRank not at a fixpoint after {max_iterations} rounds "
-                "— raise max_iterations or use a fixed iteration count"
-            )
+    def step(ranks, _n):
         contrib = (
             ed.join(ranks, ed["src"] == ranks["id"])
             .select("dst", F.expr("r div d").alias("c"))
@@ -90,30 +75,37 @@ def pagerank_fixedpoint(
         in_sum = contrib.groupBy(F.col("dst").alias("nid")).agg(
             F.sum("c").alias("s")
         )
-        new_ranks = (
-            nodes.join(in_sum, nodes["id"] == F.col("nid"), "left")
-            .select(
-                "id",
-                (
-                    F.lit(teleport)
-                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint(eager=False)
+        new_ranks = nodes.join(in_sum, nodes["id"] == F.col("nid"), "left").select(
+            "id",
+            (
+                F.lit(teleport)
+                + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+            ).cast("long").alias("r"),
         )
-        if converge:
-            # the change-count is the round's one materializing job; in
-            # fixed-round mode the final action materializes the (plan-
-            # truncated) chain in one job
-            changed = (
-                new_ranks.withColumnsRenamed({"id": "nid2", "r": "r2"})
-                .join(ranks, F.col("nid2") == ranks["id"])
-                .filter(F.col("r2") != F.col("r"))
-                .count()
-            )
-            if changed == 0:
-                break
-        ranks = new_ranks
+        if iterations is not None:
+            # fixed rounds: no probe — the final action materializes the
+            # (plan-truncated) chain in one job
+            return checkpoint_round(new_ranks)[0], False
+        new_ranks, row = checkpoint_round(
+            new_ranks,
+            lambda d: d.withColumnsRenamed({"id": "nid2", "r": "r2"})
+            .join(ranks, F.col("nid2") == ranks["id"])
+            .filter(F.col("r2") != F.col("r"))
+            .agg(F.count(F.lit(1))),
+        )
+        return new_ranks, row[0] == 0
+
+    ranks = nodes.withColumn("r", F.lit(base).cast("long"))
+    if iterations is not None:
+        ranks = fixpoint(step, ranks, iterations)
+    else:
+        ranks = fixpoint(
+            step, ranks, max_iterations,
+            limit_error=ValueError(
+                f"PageRank not at a fixpoint after {max_iterations} rounds "
+                "— raise max_iterations or use a fixed iteration count"
+            ),
+        )
     return ranks.select("id", F.col("r").alias("rank_fp"))
 
 
@@ -194,22 +186,15 @@ def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
     )
-    # r14: checkpoint the ADJACENCY table and recover everything below
-    # from it. The r13 shape consumed `oriented` from three plan
-    # branches (the wedge stream plus both adjacency joins), so the
-    # whole edges+degrees+orientation chain re-ran ~3x per query (g15's
-    # final plan: 64 Exchanges / 16 SortMergeJoins even with the edge
-    # input checkpointed by the caller); checkpointing `oriented` alone
-    # was measured SLOWER in r13 (7.2 -> 10.0 s) because the stats loss
-    # demoted ~30 duplicated-subtree broadcasts. Checkpointing adj
-    # instead leaves exactly ONE post-checkpoint join: each (src, dst)
-    # oriented edge is recovered by EXPLODING adj's own nbrs array
-    # (collect_list over the distinct oriented edges — every edge back
-    # exactly once, with the u-side array already on the row for free),
-    # so only the dst-side adjacency lookup remains a join. That join
-    # is node-scale x node-scale with sqrt(m)-bounded arrays — never
-    # broadcastable at 100 TB anyway, so the checkpoint costs no
-    # legitimate broadcast (the r13 objection does not apply).
+    # checkpoint the ADJACENCY table and recover everything below from
+    # it: `oriented` would otherwise feed three plan branches (the
+    # wedge stream plus both adjacency joins) and re-run the whole
+    # edges+degrees+orientation chain per branch, while checkpointing
+    # `oriented` itself measured slower (the stats loss demotes the
+    # duplicated subtrees' broadcasts). From adj, each oriented edge is
+    # recovered by EXPLODING its own nbrs array, so only the dst-side
+    # adjacency lookup remains a join — node-scale x node-scale with
+    # sqrt(m)-bounded arrays, never a legitimate broadcast at scale.
     adj = (
         oriented.groupBy("src")
         .agg(F.collect_list("dst").alias("nbrs"))
@@ -244,43 +229,28 @@ def sssp_bellman_ford(
     relaxations over an UNDIRECTED weighted graph (edges are
     symmetrized here). Returns (node, dist) for every reached node.
 
-    ``rounds=None`` (r7 verdict #4) relaxes TO THE FIXPOINT: the loop
-    stops when a round improves NO node — exact by monotonicity (each
-    node's dist only ever decreases under min over integer weights),
-    guaranteed within |V| rounds on positive weights. A fixed
-    ``rounds=K`` keeps the old semantics (the chained-CTE-oracle
-    convention); with K < the graph's weighted-hop radius that result
-    is a round-bounded approximation, NOT the shortest path.
+    ``rounds=None`` relaxes TO THE FIXPOINT: the loop stops when a
+    round improves NO node — exact by monotonicity (each node's dist
+    only ever decreases under min over integer weights), guaranteed
+    within |V| rounds on positive weights. A fixed ``rounds=K`` is the
+    chained-CTE-oracle convention; with K < the graph's weighted-hop
+    radius that result is a round-bounded approximation, NOT the
+    shortest path.
 
     ``max_rounds`` (converge mode only) raises if any round BEYOND it
     still improves a node — for callers whose correctness oracle is a
     fixed chained-CTE relaxation of that depth: a graph whose radius
-    outgrows the oracle then fails LOUDLY at run time instead of
-    surfacing as a silent value mismatch (r8 ADVICE #3).
+    outgrows the oracle then fails LOUDLY instead of surfacing as a
+    silent value mismatch.
 
-    Scale shape (r8: FRONTIER relaxation, delta Bellman-Ford): only
-    nodes improved in the previous round can improve a neighbor, so
-    each round joins the shrinking frontier — not the whole dist table
-    — against the edge list (both partitioned by node key), takes a
-    min-aggregate, and anti-join-merges the improvements back. Late
-    rounds touch a handful of nodes instead of the full reachable set
-    (sf0.1 part graph, warm: 7.8 -> 6.0 s — modest locally because the
-    graph's radius is ~4 so the frontier only collapses on the last
-    round; the win is structural at scale, where a dense round moves
-    the entire reachable set every time). Every intermediate
-    is localCheckpoint'ed so lineage stays O(1) and the emptiness probe
-    never re-runs prior rounds (the components.py/ids.py rule). Integer
-    weights and min() keep every round exact and order-independent;
-    fixed-round results are identical to the dense form because
-    non-improved sources can never re-improve a neighbor."""
-    # r13: every per-round materialization in this loop is a LAZY
-    # checkpoint whose materializing job is the round's frontier count
-    # (the components.py probe pattern): sym and the merged dist ride
-    # along inside the round-1 / next-round count job instead of each
-    # paying a separate eager job plus a probe re-scan — one Spark job
-    # per round where there were three (guide §2.4). Lineage is
-    # truncated at mark time either way, so the emptiness probe still
-    # never re-runs prior rounds.
+    Scale shape (delta Bellman-Ford): only nodes improved in the
+    previous round can improve a neighbor, so each round joins the
+    shrinking frontier — not the whole dist table — against the edge
+    list, takes a min-aggregate, and anti-join-merges the improvements
+    back; late rounds touch a handful of nodes instead of the full
+    reachable set. The frontier count is the round's one job
+    (operators/rounds.py). Fixed-round results equal the dense form's
+    because non-improved sources can never re-improve a neighbor."""
     sym = edges.select(
         F.col(src_col).alias("u"), F.col(dst_col).alias("v"), F.col(weight_col).alias("w")
     ).unionByName(
@@ -291,56 +261,46 @@ def sssp_bellman_ford(
     dist = sym.sparkSession.createDataFrame(
         [(int(source), 0)], "node long, dist long"
     )
-    converge = rounds is None
-    # frontier relaxation (delta Bellman-Ford): only nodes whose dist
-    # IMPROVED last round can improve a neighbor this round, so each
-    # round joins the (shrinking) frontier against the edges, not the
-    # whole dist table — late rounds touch a handful of nodes instead
-    # of the full reachable set. Convergence = empty frontier (exact:
-    # no improvement anywhere means the fixpoint, and a fixed round
-    # count relaxes identically to the dense form because min() over
-    # candidates never re-improves from non-improved sources).
-    frontier = dist
-    r = 0
-    while True:
-        if not converge and r >= rounds:
-            break
-        r += 1
+
+    def step(state, _n):
+        dist, frontier = state
         relaxed = frontier.join(sym, frontier["node"] == sym["u"]).select(
             F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("cand")
         )
         best = relaxed.groupBy("node").agg(F.min("cand").alias("cand"))
-        improved = (
+        # the round's one job: counting the frontier evaluates the relax
+        # + min-aggregate + improvement filter, and materializes last
+        # round's lazy dist merge (and sym on round 1) in the same pass
+        improved, row = checkpoint_round(
             best.join(dist.withColumnsRenamed({"dist": "old", "node": "onode"}),
                       best["node"] == F.col("onode"), "left")
             .filter(F.col("old").isNull() | (F.col("cand") < F.col("old")))
-            .select("node", F.col("cand").alias("dist"))
-            .localCheckpoint(eager=False)
+            .select("node", F.col("cand").alias("dist")),
+            lambda d: d.agg(F.count(F.lit(1))),
         )
-        # the ONE job of the round: counting the frontier evaluates the
-        # relax + min-aggregate + improvement filter, materializing
-        # `improved` (and, transitively, last round's lazy dist merge
-        # and sym on round 1) in the same pass
-        n_improved = improved.count()
-        if converge and n_improved == 0:
-            break
-        if converge and max_rounds is not None and r > max_rounds:
-            raise ValueError(
-                f"SSSP still improving at round {r} but the caller's "
-                f"fixed-depth oracle only relaxes {max_rounds} rounds — "
-                "deepen the oracle (the weighted-hop radius outgrew it)"
-            )
-        dist = (
+        if row[0] == 0:
+            # no improvement anywhere: the fixpoint, and in fixed-round
+            # mode every remaining round is the identity
+            return state, True
+        dist, _ = checkpoint_round(
             dist.join(improved.select(F.col("node").alias("inode")),
                       dist["node"] == F.col("inode"), "left_anti")
             .unionByName(improved)
-            .localCheckpoint(eager=False)
         )
-        frontier = improved
-        if not converge and n_improved == 0:
-            # fixed-round form: remaining rounds are identity
-            break
-    return dist
+        return (dist, improved), False
+
+    if rounds is not None:
+        return fixpoint(step, (dist, dist), rounds)[0]
+    # round max_rounds + 1 may still run, but only to find no improvement
+    limit = None if max_rounds is None else max_rounds + 1
+    return fixpoint(
+        step, (dist, dist), limit,
+        limit_error=ValueError(
+            f"SSSP still improving at round {limit} but the caller's "
+            f"fixed-depth oracle only relaxes {max_rounds} rounds — "
+            "deepen the oracle (the weighted-hop radius outgrew it)"
+        ),
+    )[0]
 
 
 def kcore_peel(
@@ -356,60 +316,51 @@ def kcore_peel(
     nodes alive after the last peel, with their degree in the surviving
     subgraph.
 
-    ``rounds=None`` (r7 verdict #4) peels TO THE FIXPOINT — the exact
-    k-core (maximal subgraph of min-degree >= k). The convergence check
-    is exact AND early-exiting: each round's degree aggregate (needed
-    anyway) also yields, as one bounded driver scalar, (nodes-in-graph,
-    nodes-with-deg>=k); when they are equal the filter is the identity,
-    so the loop stops BEFORE the two semi-joins — a converged round
-    costs one aggregate, not a full peel. A fixed ``rounds=K`` keeps
-    the old plan-static behavior (the chained-CTE-oracle convention);
-    with K < the peel depth that result is NOT the k-core.
+    ``rounds=None`` peels TO THE FIXPOINT — the exact k-core (maximal
+    subgraph of min-degree >= k): each round's probe counts
+    (nodes-in-graph, nodes-with-deg>=k); when they are equal the next
+    peel is the identity and the loop stops before it. A fixed
+    ``rounds=K`` is the chained-CTE-oracle convention; with K < the
+    peel depth that result is NOT the k-core.
 
     Scale shape: each round = one degree aggregate over the surviving
     symmetric edge list + one semi-join filter of edges against
     surviving nodes — both keyed on the node, riding one exchange; the
-    edge list is localCheckpoint'ed per round (lineage O(1), the
-    components.py rule), which also keeps the convergence scalar from
-    re-running prior rounds. Monotone: the surviving set only shrinks,
+    edge list is checkpointed per round through operators/rounds.py
+    (lineage O(1); in converge mode the convergence scalar is the job
+    that materializes it). Monotone: the surviving set only shrinks,
     so per-round cost falls.
     """
     if k < 1 or (rounds is not None and rounds < 1):
         raise ValueError(f"need k >= 1 and rounds >= 1: got k={k}, rounds={rounds}")
-    # r13: lazy checkpoints — in converge mode each round's degree
-    # aggregate (the probe the loop needs anyway) is the job that
-    # materializes the previous round's peeled edge list, so a round
-    # costs one job instead of a peel job plus a probe re-scan (the
-    # components.py pattern); lineage is truncated at mark time, so the
-    # probe still never re-runs prior rounds
-    sym = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v"))
+
+    def degrees(sym: DataFrame) -> DataFrame:
+        return sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+
+    # converge mode probes each round's peeled edge list: (nodes in the
+    # graph, nodes with deg >= k); equal means the next peel is the
+    # identity, so the loop stops before it
+    probe = None if rounds is not None else (
+        lambda s: degrees(s).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("deg") >= k).cast("long")).alias("a"),
         )
-        .localCheckpoint(eager=False)
     )
-    converge = rounds is None
-    r = 0
-    while converge or r < rounds:
-        r += 1
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        if converge:
-            row = deg.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("deg") >= k).cast("long")).alias("a"),
-            ).collect()[0]
-            if row["n"] is None or row["n"] == (row["a"] or 0):
-                break  # every surviving node already has deg >= k (or graph empty)
-        alive = deg.filter(F.col("deg") >= k).select("u")
-        sym = (
+
+    def peel(state, _n):
+        sym, row = state
+        if row is not None and row["n"] == (row["a"] or 0):
+            return state, True
+        alive = degrees(sym).filter(F.col("deg") >= k).select("u")
+        return checkpoint_round(
             sym.join(alive, "u")
             .join(alive.withColumnsRenamed({"u": "v"}), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
-    return (
-        sym.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .select(F.col("u").alias("node"), "degree")
+            .select("u", "v"),
+            probe,
+        ), False
+
+    sym = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")).unionByName(
+        edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v"))
     )
+    sym, _ = fixpoint(peel, checkpoint_round(sym, probe), rounds)
+    return degrees(sym).select(F.col("u").alias("node"), F.col("deg").alias("degree"))

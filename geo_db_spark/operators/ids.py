@@ -12,8 +12,7 @@ shape every large engine uses:
    boundaries, balanced partitions even under skew);
 2. count rows per partition (a map-side-combined aggregate, one row out
    per partition), cumulative-sum the counts DRIVER-SIDE (bounded scalar
-   work, the closure.py convergence-check pattern) into per-partition
-   offsets;
+   work) into per-partition offsets;
 3. global id = partition offset + the within-partition ordinal.
 
 The ordinal comes from ``monotonically_increasing_id``'s documented
@@ -103,6 +102,11 @@ def assign_stable_ids_counted(
     them)."""
     if not order_cols:
         raise ValueError("order_cols must name at least one column")
+    if not set(drop_cols) <= set(order_cols):
+        raise ValueError(
+            f"drop_cols {sorted(set(drop_cols) - set(order_cols))} are not "
+            "order columns: only sort keys may be dropped"
+        )
     if materialize_input:
         # lazy: the range exchange's boundary-sampling pass reads every
         # input partition and is the first job to touch this frame, so
@@ -134,15 +138,11 @@ def assign_stable_ids_counted(
     # offsets would describe a partitioning the output rows don't have
     # (observed: ~3% duplicate ids at 300k rows x 32 partitions; only
     # green at small scale because the reservoir sample holds entire
-    # partitions). r13: the checkpoint is LAZY and the counts collect
-    # below is the job that materializes it (the components.py
-    # round-probe pattern) — the counts aggregate evaluates every
-    # partition, so exactly ONE job still executes the sampled
-    # exchange, and the old eager form's separate materialize job +
-    # full cache re-scan for the counts collapse into one pass (guide
-    # §2.4: remove redundant passes). Lineage is truncated either way,
-    # so a lost block after materialization is an error, never a
-    # silent re-sample.
+    # partitions). The checkpoint is LAZY and the counts collect below
+    # is the job that materializes it (operators/rounds.py's rule): the
+    # counts aggregate evaluates every partition, so exactly ONE job
+    # executes the sampled exchange. Lineage is truncated at the mark,
+    # so a lost block is an error, never a silent re-sample.
     marked = marked.localCheckpoint(eager=False)
     # one output row per partition; offsets are cumulative in partition
     # order and partitions are key-ordered, so ids are a 1..n permutation

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from geo_db_spark.operators.rounds import checkpoint_round
+
 QUANT = 1 << 20  # 2^20; float32 inputs * 2^20 stay exact in doubles
 
 
@@ -296,6 +298,56 @@ def batch_local_topm(
     return scored.mapInPandas(cut, scored.schema)
 
 
+def _rescore_topk(
+    scores: DataFrame,
+    score_col: str,
+    ascending: bool,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rescore_m: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The approximate searches' second stage: keep each query's top
+    ``rescore_m`` (q_id, c_id) candidates by ``score_col`` (ties on
+    c_id), rescore them with the exact quantized cosine, and return the
+    top ``k`` as (q_id, neighbor_id, cosine, rank)."""
+    # batch-local pre-cut: the global window must never consume the
+    # unreduced candidate stream (see batch_local_topm)
+    scores = batch_local_topm(scores, rescore_m, score_col, ascending=ascending)
+    order = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w_cand = Window.partitionBy("q_id").orderBy(order, F.col("c_id"))
+    cand = (
+        scores.withColumn("__r", F.row_number().over(w_cand))
+        .filter(F.col("__r") <= rescore_m)
+        .select("q_id", "c_id")
+    )
+    exact = with_quantized(corpus, vec_col).select(
+        F.col(id_col).alias("c_id"), F.col("q").alias("c_q"), F.col("qnorm").alias("c_n")
+    )
+    exact_q = with_quantized(queries, vec_col).select(
+        F.col(id_col).alias("q_id"), F.col("q").alias("q_q"), F.col("qnorm").alias("q_n")
+    )
+    rescored = (
+        cand.join(exact, "c_id")
+        .join(F.broadcast(exact_q), "q_id")
+        .select(
+            "q_id",
+            F.col("c_id").alias("neighbor_id"),
+            cosine_from_quantized(
+                int_dot(F.col("c_q"), F.col("q_q")), F.col("q_n"), F.col("c_n")
+            ).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return (
+        rescored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
+    )
+
+
 def cosine_topk_sq8(
     corpus: DataFrame,
     queries: DataFrame,
@@ -349,37 +401,8 @@ def cosine_topk_sq8(
             int_dot(F.col("c_rq"), F.col("q_rq")), F.col("q_rq_n"), F.col("c_rq_n")
         ).alias("adc"),
     )
-    # batch-local pre-cut: the global window must never consume the
-    # unreduced corpus x queries scan (see batch_local_topm)
-    adc = batch_local_topm(adc, rescore_m, "adc", ascending=False)
-    w_cand = Window.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("c_id"))
-    cand = (
-        adc.withColumn("__r", F.row_number().over(w_cand))
-        .filter(F.col("__r") <= rescore_m)
-        .select("q_id", "c_id")
-    )
-    exact = with_quantized(corpus, vec_col).select(
-        F.col(id_col).alias("c_id"), F.col("q").alias("c_q"), F.col("qnorm").alias("c_n")
-    )
-    exact_q = with_quantized(queries, vec_col).select(
-        F.col(id_col).alias("q_id"), F.col("q").alias("q_q"), F.col("qnorm").alias("q_n")
-    )
-    rescored = (
-        cand.join(exact, "c_id")
-        .join(F.broadcast(exact_q), "q_id")
-        .select(
-            "q_id",
-            F.col("c_id").alias("neighbor_id"),
-            cosine_from_quantized(
-                int_dot(F.col("c_q"), F.col("q_q")), F.col("q_n"), F.col("c_n")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
+    return _rescore_topk(
+        adc, "adc", False, corpus, queries, k, rescore_m, id_col, vec_col
     )
 
 
@@ -392,110 +415,16 @@ def kmeans_fixed_rounds(
     pre_quantized: bool = False,
 ):
     """Lloyd's k-means with a FIXED round count over quantized-integer
-    vectors — the IVF centroid TRAINER (the existing IVF paths use
-    first-K "trained" centroids; this is the real training step, public
-    Lloyd 1982). Returns (assignments, centroids): assignments carry
-    (id, cell, dist) with dist the exact-integer squared L2 in quantized
-    units; centroids is the final (cent_id, c) integer-array table.
-
-    Integer-exactness end to end: distances use ||x||² + ||c||² − 2x·c
-    on int64; the centroid update floor(Σx_d / n) re-quantizes means to
-    ints, so every round's state is exactly representable in BOTH
-    engines and the oracle is `rounds` chained CTE blocks — no float
-    accumulation anywhere. Fixed rounds (not convergence) keep the plan
-    static, pagerank's convention.
-
-    Scale shape per round: one broadcast of K centroid rows against the
-    corpus scan (argmin is a K-way least, here a window over K rows per
-    vector), then one posexplode aggregate for the update — two
-    shuffles of skinny rows, centroid state is O(K·dim).
-
-    ``pre_quantized=True`` takes ``vec_col`` as ALREADY integer-valued
-    (IVF residuals) and skips the float->int scaling."""
-    wq = with_prequantized if pre_quantized else with_quantized
-    qdf = wq(emb, vec_col).select(
-        F.col(id_col).alias("id"), F.col("q"), F.col("qnorm")
-    ).localCheckpoint(eager=False)
-    # Seed from the k SMALLEST ids, not filter(id < k): 1-based or
-    # sparse/hashed id spaces would otherwise silently train with fewer
-    # (or zero) centroids and return a degenerate assignment. orderBy +
-    # limit is a TakeOrdered — k rows through the driver plan, no full
-    # sort at scale. r13: both checkpoints are LAZY and the seed-guard
-    # count below is the one job that materializes them (the
-    # components.py round-probe pattern) — the TakeOrdered reads every
-    # qdf partition, so one job replaces the old three (qdf
-    # materialize, cent materialize, count re-scan).
-    cent = qdf.orderBy("id").limit(k).select(
-        F.col("id").alias("cent_id"), F.col("q").alias("c")
-    ).localCheckpoint(eager=False)
-    n_seeds = cent.count()
-    if n_seeds < k:
-        raise ValueError(
-            f"k-means needs k={k} distinct vectors to seed, found {n_seeds}"
-        )
-
-    # r13 assign rework (guide §2.3 "aggregate before you shuffle"):
-    # the argmin over the K broadcast-joined candidate rows is a
-    # groupBy min(struct(dist, cent_id)) — identical pick to the old
-    # row_number() window over (dist ASC, cent_id ASC), but the partial
-    # (map-side) MIN collapses each vector's K rows inside the scan
-    # stage, so the exchange carries N combined rows instead of N·K
-    # rows into a sort. ``carry`` lets the round update pull q through
-    # the same aggregate (first(q) is well-defined: every candidate row
-    # of a vector carries the same q), which deletes the old
-    # members-join of the assignment back against qdf — one exchange
-    # per round where there were two (window + join). Measured at
-    # sf0.1: 1.0-1.2 s -> 0.88-0.96 s per assign, and one fewer
-    # exchange per round; bit-identical results.
-    def scored(centroids: DataFrame):
-        c = centroids.withColumn("c_n", int_dot(F.col("c"), F.col("c")))
-        return qdf.join(F.broadcast(c)).select(
-            "id",
-            "q",
-            F.struct(
-                (
-                    F.col("qnorm") + F.col("c_n")
-                    - 2 * int_dot(F.col("q"), F.col("c"))
-                ).alias("dist"),
-                F.col("cent_id").alias("cent_id"),
-            ).alias("__cand"),
-        )
-
-    def assign(centroids: DataFrame, carry_q: bool = False) -> DataFrame:
-        aggs = [F.min("__cand").alias("__b")]
-        if carry_q:
-            aggs.append(F.first("q").alias("q"))
-        out = scored(centroids).groupBy("id").agg(*aggs)
-        cols = [
-            "id",
-            F.col("__b.cent_id").alias("cell"),
-            F.col("__b.dist").alias("dist"),
-        ] + (["q"] if carry_q else [])
-        return out.select(*cols)
-
-    for _ in range(rounds):
-        members = assign(cent, carry_q=True)
-        per_dim = members.select("cell", F.posexplode("q").alias("d", "x")).groupBy(
-            "cell", "d"
-        ).agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        # r14: LAZY checkpoint — the round's shuffle stages still run at
-        # mark time (AQE materializes exchanges when the RDD is built),
-        # but the K-row result stage folds into the job that first reads
-        # the frame: the next round's centroid broadcast, or the
-        # caller's first materializing job after the final round. One
-        # fewer driver round-trip per round, identical math (the update
-        # is integer-exact and deterministic, so a concurrent first
-        # compute by two consumer stages can only duplicate work, never
-        # diverge).
-        cent = per_dim.withColumn(
-            "v", F.floor(F.col("s").cast("double") / F.col("n")).cast("long")
-        ).groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "v"))), lambda s: s["v"]
-            ).alias("c")
-        ).select(F.col("cell").alias("cent_id"), "c").localCheckpoint(eager=False)
-
-    return assign(cent), cent
+    vectors — the IVF centroid TRAINER (public Lloyd 1982): one group
+    of ``kmeans_fixed_rounds_grouped``. Returns (assignments,
+    centroids): assignments carry (id, cell, dist) with dist the
+    exact-integer squared L2 in quantized units; centroids is the final
+    (cent_id, c) integer-array table. ``id_col`` must be unique."""
+    assigned, cent = kmeans_fixed_rounds_grouped(
+        emb.withColumn("__g", F.lit(0)), k, rounds, "__g", id_col, vec_col,
+        pre_quantized,
+    )
+    return assigned.drop("g"), cent.drop("g")
 
 
 def kmeans_fixed_rounds_grouped(
@@ -507,49 +436,63 @@ def kmeans_fixed_rounds_grouped(
     vec_col: str = "embedding",
     pre_quantized: bool = False,
 ):
-    """``kmeans_fixed_rounds`` run INDEPENDENTLY per group in ONE set of
-    jobs — the PQ subspace trainer (r8 perf rework): the per-subspace
-    loop ran m_sub sequential Lloyd trainings, each with its own
-    assignment window, update aggregate and checkpoint; keying every
-    stage by ``group_col`` trains all groups in the same passes, so the
-    corpus is scanned rounds+1 times TOTAL instead of per subspace.
-    Identical math per group (same seed rule — the k smallest ids,
-    fetched once via TakeOrdered and shared across groups since all
-    groups carry the same id space — same (dist, cent_id) argmin order,
-    same floor-mean update), so results are bit-identical to the
-    sequential form and the chained-CTE oracles are untouched.
+    """Lloyd's k-means run INDEPENDENTLY per ``group_col`` value in ONE
+    set of jobs — every stage is keyed by the group, so the corpus is
+    scanned rounds+1 times TOTAL however many groups there are (the PQ
+    subspace trainer keys by the subspace index). ``(group, id_col)``
+    must be unique, and every group must carry the same id space.
 
-    Returns (assignments (group, id, cell, dist), centroids (group,
-    cent_id, c)). Scale: the argmin window partitions by (group, id) —
-    never a single task; centroid state is O(groups·K·dim) broadcast."""
+    Integer-exactness end to end: distances use ||x||² + ||c||² − 2x·c
+    on int64; the centroid update floor(Σx_d / n) re-quantizes means to
+    ints, so every round's state is exactly representable in BOTH
+    engines and the oracle is `rounds` chained CTE blocks — no float
+    accumulation anywhere. Fixed rounds (not convergence) keep the plan
+    static, pagerank's convention.
+
+    Seeds are the k SMALLEST ids, not filter(id < k): 1-based or
+    sparse/hashed id spaces would otherwise silently train with fewer
+    (or zero) centroids. Ties in the argmin break on cent_id.
+
+    Scale shape per round: one broadcast of the groups·K centroid rows
+    against the corpus scan (a map-side partial MIN picks each vector's
+    cell), then one posexplode aggregate for the update — two shuffles
+    of skinny rows; centroid state is O(groups·K·dim).
+
+    ``pre_quantized=True`` takes ``vec_col`` as ALREADY integer-valued
+    (IVF residuals) and skips the float->int scaling.
+
+    Returns (assignments (g, id, cell, dist), centroids (g, cent_id, c))."""
     wq = with_prequantized if pre_quantized else with_quantized
-    qdf = wq(emb, vec_col).select(
-        F.col(group_col).alias("g"), F.col(id_col).alias("id"), "q", "qnorm"
-    ).localCheckpoint(eager=False)
-    # r13: lazy checkpoints, materialized together by the seed-guard
-    # count (one job instead of three — see kmeans_fixed_rounds)
-    seed_ids = (
-        qdf.select("id").distinct().orderBy("id").limit(k).localCheckpoint(eager=False)
-        .select(F.col("id").alias("__sid"))
+    # every group shares the id space, so the k smallest ids are the
+    # first group's k smallest — a TakeOrdered of k rows, no full sort
+    # and no distinct shuffle; it is the job that materializes qdf
+    qdf, seed = checkpoint_round(
+        wq(emb, vec_col).select(
+            F.col(group_col).alias("g"), F.col(id_col).alias("id"), "q", "qnorm"
+        ),
+        lambda d: d.orderBy("g", "id").limit(k).agg(
+            F.collect_list(F.struct("g", "id"))
+        ),
     )
-    n_seeds = seed_ids.count()
-    if n_seeds < k:
+    seed_rows = sorted(seed[0])
+    seed_ids = [i for g, i in seed_rows if g == seed_rows[0][0]]
+    if len(seed_ids) < k:
         raise ValueError(
-            f"k-means needs k={k} distinct vectors to seed, found {n_seeds}"
+            f"k-means needs k={k} distinct vectors to seed, found {len(seed_ids)}"
         )
-    cent = qdf.join(
-        F.broadcast(seed_ids), qdf["id"] == F.col("__sid")
-    ).select("g", F.col("id").alias("cent_id"), F.col("q").alias("c"))
+    cent = qdf.filter(F.col("id").isin(seed_ids)).select(
+        "g", F.col("id").alias("cent_id"), F.col("q").alias("c")
+    )
 
-    # r13 assign rework — the ungrouped trainer's min(struct) shape
-    # keyed by (g, id): map-side partial MIN collapses each (group,
-    # vector)'s K candidate rows before the exchange (no N·K window
-    # sort), and carrying q through the aggregate deletes the members
-    # re-join. Bit-identical argmin ((dist, cent_id) lexicographic ==
-    # the old window order).
-    def scored(centroids: DataFrame):
+    # the argmin over a vector's K broadcast-joined candidate rows is a
+    # groupBy min(struct(dist, cent_id)): the map-side partial MIN
+    # collapses them inside the scan stage, so the exchange carries N
+    # rows, not N·K. Carrying q through the same aggregate (first(q) is
+    # well-defined: every candidate row of a vector has the same q)
+    # saves a members join in the update.
+    def assign(centroids: DataFrame, carry_q: bool = False) -> DataFrame:
         c = centroids.withColumn("c_n", int_dot(F.col("c"), F.col("c")))
-        return qdf.join(F.broadcast(c), "g").select(
+        scored = qdf.join(F.broadcast(c), "g").select(
             "g",
             "id",
             "q",
@@ -561,36 +504,35 @@ def kmeans_fixed_rounds_grouped(
                 F.col("cent_id").alias("cent_id"),
             ).alias("__cand"),
         )
-
-    def assign(centroids: DataFrame, carry_q: bool = False) -> DataFrame:
         aggs = [F.min("__cand").alias("__b")]
         if carry_q:
             aggs.append(F.first("q").alias("q"))
-        out = scored(centroids).groupBy("g", "id").agg(*aggs)
-        cols = [
+        return scored.groupBy("g", "id").agg(*aggs).select(
             "g",
             "id",
             F.col("__b.cent_id").alias("cell"),
             F.col("__b.dist").alias("dist"),
-        ] + (["q"] if carry_q else [])
-        return out.select(*cols)
+            *(["q"] if carry_q else []),
+        )
 
     for _ in range(rounds):
-        members = assign(cent, carry_q=True)
-        per_dim = members.select(
+        per_dim = assign(cent, carry_q=True).select(
             "g", "cell", F.posexplode("q").alias("d", "x")
         ).groupBy("g", "cell", "d").agg(
             F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
         )
-        # r14: lazy for the same reason as the ungrouped trainer — the
-        # round's result stage rides the next consumer's job
-        cent = per_dim.withColumn(
-            "v", F.floor(F.col("s").cast("double") / F.col("n")).cast("long")
-        ).groupBy("g", "cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "v"))), lambda s: s["v"]
-            ).alias("c")
-        ).select("g", F.col("cell").alias("cent_id"), "c").localCheckpoint(eager=False)
+        # no probe: the round's K-row result stage rides the next
+        # consumer's job (the next round's centroid broadcast, or the
+        # caller's first action after the final round)
+        cent, _ = checkpoint_round(
+            per_dim.withColumn(
+                "v", F.floor(F.col("s").cast("double") / F.col("n")).cast("long")
+            ).groupBy("g", "cell").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("d", "v"))), lambda s: s["v"]
+                ).alias("c")
+            ).select("g", F.col("cell").alias("cent_id"), "c")
+        )
 
     return assign(cent), cent
 
@@ -614,11 +556,8 @@ def pq_train_encode_adc(
     ``pre_quantized=True`` for its residual form, whose inputs are
     already integer-valued).
 
-    r8 perf rework: all m_sub codebooks train in ONE grouped Lloyd run
-    (kmeans_fixed_rounds_grouped keyed by the subspace index — the
-    corpus slices explode once) instead of m_sub sequential trainings;
-    bit-identical per-subspace results, measured ~2x on the PQ family
-    at sf0.1."""
+    All m_sub codebooks train in ONE grouped Lloyd run keyed by the
+    subspace index, so the corpus slices explode once."""
     if dim % m_sub != 0:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
     sub_w = dim // m_sub
@@ -723,37 +662,8 @@ def cosine_topk_pq(
     adc = adc.filter(F.col("c_id") != F.col("q_id")).select(
         "q_id", "c_id", adist.alias("adist")
     )
-    # batch-local pre-cut: the global window must never consume the
-    # unreduced candidate stream (see batch_local_topm)
-    adc = batch_local_topm(adc, rescore_m, "adist", ascending=True)
-    w_cand = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("c_id"))
-    cand = (
-        adc.withColumn("__r", F.row_number().over(w_cand))
-        .filter(F.col("__r") <= rescore_m)
-        .select("q_id", "c_id")
-    )
-    exact = with_quantized(corpus, vec_col).select(
-        F.col(id_col).alias("c_id"), F.col("q").alias("c_q"), F.col("qnorm").alias("c_n")
-    )
-    exact_q = with_quantized(queries, vec_col).select(
-        F.col(id_col).alias("q_id"), F.col("q").alias("q_q"), F.col("qnorm").alias("q_n")
-    )
-    rescored = (
-        cand.join(exact, "c_id")
-        .join(F.broadcast(exact_q), "q_id")
-        .select(
-            "q_id",
-            F.col("c_id").alias("neighbor_id"),
-            cosine_from_quantized(
-                int_dot(F.col("c_q"), F.col("q_q")), F.col("q_n"), F.col("c_n")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
+    return _rescore_topk(
+        adc, "adist", True, corpus, queries, k, rescore_m, id_col, vec_col
     )
 
 
@@ -801,13 +711,11 @@ def ivf_pq_topk(
     broadcast lookup joins, and only rescore_m candidates per query
     fetch real vectors."""
     if not residual:
-        # r14 (guide §2.6): the raw-subvector PQ training chain reads
-        # ONLY the corpus — it is independent of the coarse k-means
-        # chain until the final probe query joins codes with cells.
-        # Run it on a driver thread so its jobs (slice explode + seed
-        # probe, grouped Lloyd round, dt_all materialize) back-fill the
-        # executor time the coarse chain's sequential small jobs leave
-        # idle; FIFO scheduling interleaves the two chains' stages.
+        # the raw-subvector PQ training chain reads ONLY the corpus, so
+        # it is independent of the coarse k-means chain until the probe
+        # joins codes with cells: run it on a driver thread, where its
+        # jobs back-fill the executor time the coarse chain's small
+        # sequential jobs leave idle.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
@@ -821,26 +729,31 @@ def ivf_pq_topk(
                     )
                 )
             )
-            assigned, cent = kmeans_fixed_rounds(
-                corpus, k=coarse_k, rounds=coarse_rounds, id_col=id_col,
-                vec_col=vec_col,
-            )
-            # the assignment feeds the codes join AND the query-cells
-            # branch below — without materialization each branch re-runs
-            # the K-way scoring over the corpus (the ids.py rule)
-            cells = assigned.select(
-                F.col("id").alias("c_id"), "cell"
-            ).localCheckpoint(eager=True)
+            try:
+                assigned, cent = kmeans_fixed_rounds(
+                    corpus, k=coarse_k, rounds=coarse_rounds, id_col=id_col,
+                    vec_col=vec_col,
+                )
+                # the assignment feeds the codes join AND the query-cells
+                # branch below — without materialization each branch
+                # re-runs the K-way scoring over the corpus
+                cells = assigned.select(
+                    F.col("id").alias("c_id"), "cell"
+                ).localCheckpoint(eager=True)
+            except Exception as exc:
+                # a running PQ chain cannot be cancelled: await it, and
+                # never drop its failure behind this one
+                if not fut.cancel() and (pq_exc := fut.exception()) is not None:
+                    exc.add_note(f"the concurrent PQ training also failed: {pq_exc!r}")
+                raise
             codes, dts = fut.result()
     else:
         assigned, cent = kmeans_fixed_rounds(
             corpus, k=coarse_k, rounds=coarse_rounds, id_col=id_col, vec_col=vec_col
         )
         # the assignment feeds THREE branches below (codes join, query
-        # cells, and the residual transform) — lazy (r14): the residual
-        # coverage-guard count is the first job through this frame and
-        # materializes it together with the trainer's final deferred
-        # round (one job where there were three)
+        # cells, and the residual transform); the coverage-guard count
+        # is the first job through it and materializes it
         cells = assigned.select(F.col("id").alias("c_id"), "cell").localCheckpoint(
             eager=False
         )
@@ -856,16 +769,13 @@ def ivf_pq_topk(
                 F.zip_with("q", "__cc", lambda x, y: x - y).alias(vec_col),
             )
             # consumed by BOTH the codebook training input and the
-            # query-residual semi-join: materialize once — lazily, the
-            # coverage-guard count below being the materializing job
-            # (its anti-join evaluates every resid partition)
+            # query-residual semi-join; the coverage-guard count below
+            # materializes it (its anti-join reads every partition)
             .localCheckpoint(eager=False)
         )
         # queries must be corpus members for their residuals to exist —
         # a query id outside the corpus would otherwise silently yield
-        # EMPTY ADC tables and zero results (r8 ADVICE #5). Bounded
-        # driver scalar: an anti-join count over the (small-by-contract)
-        # query set.
+        # EMPTY ADC tables and zero results.
         uncovered = (
             queries.select(F.col(id_col).alias(id_col))
             .join(resid.select(id_col), id_col, "left_anti")
@@ -897,37 +807,8 @@ def ivf_pq_topk(
     adc = adc.filter(F.col("c_id") != F.col("q_id")).select(
         "q_id", "c_id", adist.alias("adist")
     )
-    # batch-local pre-cut: the global window must never consume the
-    # unreduced candidate stream (see batch_local_topm)
-    adc = batch_local_topm(adc, rescore_m, "adist", ascending=True)
-    w_cand = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("c_id"))
-    cand = (
-        adc.withColumn("__r", F.row_number().over(w_cand))
-        .filter(F.col("__r") <= rescore_m)
-        .select("q_id", "c_id")
-    )
-    exact = with_quantized(corpus, vec_col).select(
-        F.col(id_col).alias("c_id"), F.col("q").alias("c_q"), F.col("qnorm").alias("c_n")
-    )
-    exact_q = with_quantized(queries, vec_col).select(
-        F.col(id_col).alias("q_id"), F.col("q").alias("q_q"), F.col("qnorm").alias("q_n")
-    )
-    rescored = (
-        cand.join(exact, "c_id")
-        .join(F.broadcast(exact_q), "q_id")
-        .select(
-            "q_id",
-            F.col("c_id").alias("neighbor_id"),
-            cosine_from_quantized(
-                int_dot(F.col("c_q"), F.col("q_q")), F.col("q_n"), F.col("c_n")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
+    return _rescore_topk(
+        adc, "adist", True, corpus, queries, k, rescore_m, id_col, vec_col
     )
 
 

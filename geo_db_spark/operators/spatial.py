@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from geo_db_spark.operators.rounds import checkpoint_round, fixpoint
+
 
 def _dist2(metric: str) -> Column:
     """Squared distance between (p_lat,p_lon) and (s_lat,s_lon) columns
@@ -218,31 +220,25 @@ def grid_knn_join_exact(
 ) -> DataFrame:
     """Exact k nearest ``sites`` per point: ``grid_knn_join``'s blocking
     with an iterative RING EXPANSION for the points the 3x3 neighborhood
-    cannot satisfy (r5 verdict #4) — the recursive-frontier pattern of
-    operators/closure.py applied to space.
+    cannot satisfy — a frontier loop like transitive_closure_loop,
+    applied to space.
 
     Round at radius r probes the (2r+1)^2 cell neighborhood (column
     offsets wrapped mod the row width; once 2r+1 >= width the probe is
     the full row). A point is DONE when it has >= k candidates whose
-    distance is STRICTLY below the round's guarantee radius
-    (r*cell_deg for "degrees"; for "scaled" the per-point threshold
-    bound min(t, r*cell_deg*cos(|p_lat|+t/2)) with t = r*cell_deg*
-    cos(|p_lat|) — see the inline derivation) — any unprobed site sits
-    >= r full cells away (Chebyshev
-    cell distance >= r+1, gap of r cells), so nothing outside the probed
-    region can beat the accepted top-k; strict, because an unprobed site
-    exactly AT the guarantee distance could win its site_id tiebreak
-    (ADVICE r6). The result is exact, not best-effort. Unsatisfied points re-probe at 2r; doubling
-    makes the round count logarithmic in the grid size, and the frontier
-    (sparse-neighborhood points only) shrinks geometrically. When the
-    probe covers the whole grid the point is done unconditionally — if it
-    still has < k rows there ARE fewer than k sites on earth.
+    distance is STRICTLY below the round's guarantee radius (r*cell_deg
+    for "degrees"; a per-point bound for "scaled" — see the inline
+    derivation): any unprobed site sits >= r full cells away, so
+    nothing outside the probed region can beat the accepted top-k. The
+    result is exact, not best-effort. Unsatisfied points re-probe at
+    2r, so the round count is logarithmic in the grid size; once the
+    probe covers the whole grid every point is done — if it still has
+    < k rows there ARE fewer than k sites on earth.
 
-    Scale shape: every round's join is still cell-local; the quadratic
-    (2r+1)^2 explode applies only to the shrinking unsatisfied subset,
-    never the full point set. The driver-side loop materializes one
-    COUNT per round (bounded scalar, same pattern as closure.py's
-    convergence check).
+    Scale shape: every round's join is cell-local; the quadratic
+    (2r+1)^2 explode applies only to the shrinking unsatisfied subset.
+    One pending COUNT per round (operators/rounds.py) is the job that
+    materializes the round.
     """
     import math
 
@@ -274,16 +270,18 @@ def grid_knn_join_exact(
         [], f"{point_id} {dict(points.dtypes)[point_id]}, {site_id} "
         f"{dict(sites.dtypes)[site_id]}, dist2 double, rank int"
     )
-    r = 1
-    while True:
+
+    def ring(state, n):
+        out, pending = state
+        r = 2 ** (n - 1)  # unsatisfied points re-probe at twice the radius
         # offset grid for this radius, resolved in PYTHON so wrapped
         # columns are probed exactly once (2r+1 >= w -> all w residues as
         # offsets; re-deriving -r..r there would duplicate cells), and
         # carried as a BROADCAST (dy, dx) table rather than an exploded
         # array literal — a (2r+1)² array expression at large radii blew
-        # past janino's method-size limit and killed whole-stage codegen
-        # (r6, found by the full-suite run). Row offsets are clipped to
-        # the grid height: rows beyond the poles never match anything.
+        # past janino's method-size limit and killed whole-stage codegen.
+        # Row offsets are clipped to the grid height: rows beyond the
+        # poles never match anything.
         dxs = list(range(-r, r + 1)) if 2 * r + 1 <= w else list(range(w))
         rcap = min(r, n_rows)
         offsets = spark.createDataFrame(
@@ -310,29 +308,21 @@ def grid_knn_join_exact(
             .withColumn("rank", F.row_number().over(wr))
             .filter(F.col("rank") <= k)
         )
-        covered_all = r >= n_rows and 2 * r + 1 >= w
-        if covered_all:
-            return out.unionByName(
+        if r >= n_rows and 2 * r + 1 >= w:
+            # the probe covered the whole grid: every point is done
+            return (out.unionByName(
                 ranked.select(
                     point_id, site_id, "dist2", F.col("rank").cast("int").alias("rank")
                 )
-            )
-        # Materialize the round's ranked candidates ONCE (r13, guide
-        # §2.4 remove redundant passes): `ranked` feeds done_pts, the
-        # output semi-join, AND (via done_pts) the pending anti-join —
-        # un-checkpointed, the probe explode + cell join + window ran
-        # up to three times per round. The frame is per-round small
-        # (<= k rows per pending point). The alias projection mints
-        # fresh attribute ids: localCheckpoint PRESERVES them, and
-        # done_pts (derived from this frame) is re-joined against
-        # `pending`, the pre-checkpoint lineage (the editjoin `gs`
-        # renaming pattern).
-        # r13: LAZY — the round's pending-count probe below is the one
-        # job that materializes ranked (and the new pending frame) in a
-        # single pass; out is materialized by the final action. One job
-        # per round where there were four (eager ranked, eager out,
-        # eager pending, probe re-scan) — the components.py pattern.
-        ranked = ranked.localCheckpoint(eager=False).select(
+            ), None), True
+        # Materialize the round's ranked candidates ONCE: `ranked`
+        # feeds done_pts, the output semi-join AND (via done_pts) the
+        # pending anti-join, so un-checkpointed the probe explode + cell
+        # join + window would run up to three times per round. The
+        # alias projection mints fresh attribute ids: localCheckpoint
+        # PRESERVES them, and done_pts (derived from this frame) is
+        # re-joined against `pending`, the pre-checkpoint lineage.
+        ranked = checkpoint_round(ranked)[0].select(
             *[F.col(c).alias(c) for c in ranked.columns]
         )
         # done = k candidates found AND the worst accepted one is
@@ -347,31 +337,23 @@ def grid_knn_join_exact(
         # |p_lat| + r*cell_deg/2 (a site farther in lat trips the
         # unscaled lat bound instead) — so cos of that clamped angle is
         # a valid lower bound. cos -> 0 near the poles: polar points
-        # keep expanding until covered_all, still exact.
+        # keep expanding until the probe covers the grid, still exact.
         radius = float(r * cell_deg)
         if metric == "scaled":
-            # Tight per-point bound (r7 rework): for ANY threshold t >= 0,
-            # every unprobed site is at scaled distance
+            # Tight per-point bound: for ANY threshold t >= 0, every
+            # unprobed site is at scaled distance
             #   >= min(t, r*cell_deg * cos(min(90, |p_lat| + t/2))):
             # a site with |dlat| >= t trips the unscaled lat term; one
             # with |dlat| < t has pair mid-lat within |p_lat| + t/2, so
             # its >= r*cell_deg lon gap scales by at least that cosine.
-            # The first cut used t = r*cell_deg itself, which at coarse
-            # grids clamps the cosine to 0 for most latitudes as r grows
-            # (|p_lat| + r*cell_deg/2 >= 90) — measured: nearly every
-            # point escalated to the full-grid probe, 11.8 s vs 3.6 s for
-            # the degree metric at sf0.1. Choosing t = r*cell_deg *
-            # cos(|p_lat|) (any choice is sound; this one tracks the
-            # answer's scale) keeps the bound positive everywhere except
-            # exactly at the poles.
-            # Two candidate thresholds, both sound — take the larger
-            # bound. t_a = r*cell_deg*cos|p| tracks the answer scale at
-            # small/medium radii but overshoots past the pole clamp once
-            # r*cell_deg*cos|p|/2 >= 90-|p| (cos -> 0, bound collapses —
-            # the measured 475-points-never-finish plateau); t_b =
-            # 90-|p| keeps the clamp angle at (90+|p|)/2 < 90, so at
-            # large radii the bound approaches the over-the-pole
-            # distance floor instead of 0.
+            # t = r*cell_deg itself clamps the cosine to 0 for most
+            # latitudes as r grows (nearly every point then escalates to
+            # the full-grid probe), so take the larger bound of two
+            # sound thresholds: t_a = r*cell_deg*cos|p| tracks the
+            # answer scale at small/medium radii but collapses once
+            # r*cell_deg*cos|p|/2 >= 90-|p|; t_b = 90-|p| keeps the
+            # clamp angle at (90+|p|)/2 < 90, so at large radii the
+            # bound approaches the over-the-pole distance floor.
             plat = F.abs(F.col("__plat"))
             t_a = F.lit(radius) * F.cos(F.radians(plat))
             g_a = F.least(
@@ -397,23 +379,21 @@ def grid_knn_join_exact(
             .filter((F.col("__n") >= k) & (F.col("__maxd") < guarantee))
             .select(point_id)
         )
-        # localCheckpoint per round (the closure.py iteration pattern):
-        # without it, round r's plan re-derives every prior round's
-        # windows and anti-joins — lineage grows geometrically with the
-        # doubled radii and the full-suite run OOM'd a broadcast on the
-        # accumulated tree (r6); with it, each round starts from
-        # materialized rows
-        out = out.unionByName(
+        # checkpoint per round: without it, round r's plan re-derives
+        # every prior round's windows and anti-joins — lineage grows
+        # geometrically with the doubled radii and the full-suite run
+        # OOM'd a broadcast on the accumulated tree (r6). `out` is
+        # materialized by the final action; the pending count is the
+        # round's one job.
+        out, _ = checkpoint_round(out.unionByName(
             ranked.join(done_pts, point_id, "left_semi").select(
                 point_id, site_id, "dist2", F.col("rank").cast("int").alias("rank")
             )
-        ).localCheckpoint(eager=False)
-        pending = pending.join(done_pts, point_id, "left_anti").localCheckpoint(
-            eager=False
+        ))
+        pending, row = checkpoint_round(
+            pending.join(done_pts, point_id, "left_anti"),
+            lambda d: d.agg(F.count(F.lit(1))),
         )
-        # bounded-scalar convergence check (closure.py pattern); the
-        # full count (not limit(1)) materializes every pending
-        # partition, so the next round starts from cached rows
-        if pending.count() == 0:
-            return out
-        r *= 2
+        return (out, pending), row[0] == 0
+
+    return fixpoint(ring, (out, pending), None)[0]

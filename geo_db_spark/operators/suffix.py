@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from geo_db_spark.operators.ids import assign_stable_ids, assign_stable_ids_counted
+from geo_db_spark.operators.rounds import checkpoint_round
 
 
 def _dense_rank_by(suf: DataFrame, order_cols: list[str]) -> tuple[DataFrame, int]:
@@ -48,10 +49,9 @@ def _dense_rank_by(suf: DataFrame, order_cols: list[str]) -> tuple[DataFrame, in
     broadcast cap; a sort-merge join of two already-clustered skinny
     frames is the scale-safe shape and costs ms at test SF.
 
-    r13: returns ``(df, n_distinct_keys)`` — the key count falls out of
-    the stable-ids offset collect for free, and #distinct == #suffixes
-    is exactly the doubling loop's early-exit test, so the caller no
-    longer pays a per-round max(rank) job. The distinct is materialized
+    Returns ``(df, n_distinct_keys)`` — the key count falls out of the
+    stable-ids offset collect for free, and #distinct == #suffixes is
+    the rank loop's early-exit test. The distinct is materialized
     before the range exchange (``materialize_input``): the boundary
     sampler otherwise executes the whole distinct subtree a second
     time."""
@@ -151,27 +151,25 @@ def suffix_ranks(
         "t",
     ).select("doc_id", "pos", F.expr(f"substring(t, pos, {k0})").alias("k"))
     suf, n_keys = _dense_rank_by(suf, ["k"])
-    # lazy: the suffix-count probe is the job that materializes the
-    # base ranking (components.py pattern — one job, not two)
-    suf = suf.localCheckpoint(eager=False)
-    n_suffixes = suf.count()
+    # the suffix count is the job that materializes the base ranking
+    suf, row = checkpoint_round(suf, lambda d: d.agg(F.count(F.lit(1))))
+    n_suffixes = row[0]
     c = k0  # characters covered by the current rank
     while c < slice_len:
         # early exit: dense ranks mean #distinct keys == #suffixes once
         # every suffix has its own rank, and further rounds are identity
         # — on low-duplication text k0 chars already separate almost
-        # everything. r13: the key count rides out of _dense_rank_by's
-        # offset collect, so the probe costs NO extra job (it used to be
-        # a per-round max(rank) aggregation).
+        # everything. The key count rides out of _dense_rank_by's
+        # offset collect, so the check costs no job.
         if n_keys == n_suffixes:
             break
         # QUADrupling, not doubling: the per-round cost here is Spark
         # job latency (a distributed sort per re-rank), not data volume
         # — so combine the ranks at pos, pos+c, pos+2c, pos+3c in ONE
         # round (coverage 4c, log4 rounds: slice 256 at k0=16 takes 2
-        # rounds where doubling took 4). r11 rework: instead of THREE
-        # shifted self-JOINS (each shuffling both sides), every suffix
-        # row SCATTERS its rank to the four positions that will read it
+        # rounds where doubling took 4). Rather than three shifted
+        # self-joins, every suffix row SCATTERS its rank to the four
+        # positions that will read it
         # (j = 0..3, target pos - j*c) and ONE groupBy((doc, pos))
         # gathers them — 4x skinny rows through a single exchange with
         # map-side partial aggregation (contributions to a position
@@ -179,7 +177,7 @@ def suffix_ranks(
         # the shuffle). Every targeted position >= 1 is itself a real
         # suffix position, so each group carries its own j=0 row and
         # r0 is never null; a missing shifted rank keys as 0 (sorts
-        # first — "abc" < "abcx", as before).
+        # first — "abc" < "abcx").
         contrib = suf.select(
             "doc_id",
             F.explode(

@@ -602,8 +602,8 @@ def semdedup_pairs_with_recovery(
     # hot-cell pair subset instead of the whole corpus' pairs (at 100 TB
     # that is the power-law tail, not the corpus), and when NO cell is
     # hot (every test SF; healthy production sizing) skip the CC and the
-    # pass-2 Gram entirely — a bounded-scalar driver probe, the
-    # closure.py convergence idiom. Results are identical by the
+    # pass-2 Gram entirely — a bounded-scalar driver probe. Results
+    # are identical by the
     # cell-locality argument: a hot-cell member's every pass-1 edge lies
     # inside its own (hot) cell, so CC restricted to hot cells assigns
     # hot members exactly the components the global CC would (the old

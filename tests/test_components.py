@@ -42,6 +42,16 @@ def test_self_loop_singleton(spark):
     assert got == {(7, 7)}
 
 
+def test_converged_graph_returns_in_one_round(spark):
+    """A graph with only self-loops is converged before round 1: its
+    round-1 labels equal the ids, so max_iters=1 must return them."""
+    df = spark.createDataFrame([(1, 1), (4, 4), (9, 9)], ["src", "dst"])
+    out = connected_components(df, "src", "dst", max_iters=1)
+    assert {(r["id"], r["cluster_id"]) for r in out.collect()} == {
+        (1, 1), (4, 4), (9, 9)
+    }
+
+
 def test_nonconvergence_raises(spark):
     import pytest
 

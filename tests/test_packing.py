@@ -250,6 +250,21 @@ def test_assign_stable_ids_equals_global_window_and_avoids_single_partition(spar
     assert "SinglePartition" in naive_plan  # the contrast the test pins
 
 
+def test_assign_stable_ids_rejects_dropping_a_payload_column(spark):
+    """drop_cols may only name sort keys: dropping a payload column would
+    silently lose data the caller never asked to order by."""
+    import pytest
+
+    from geo_db_spark.operators.ids import assign_stable_ids
+
+    docs = _docs(spark, n=10)
+    with pytest.raises(ValueError, match="not order columns"):
+        assign_stable_ids(docs, ["source", "doc_id"], drop_cols=("text",))
+    # a sort key may still be dropped
+    got = assign_stable_ids(docs, ["source", "doc_id"], drop_cols=("source",))
+    assert "source" not in got.columns and got.count() == 10
+
+
 def test_assign_stable_ids_permutation_at_scale(spark):
     """Regression for the r6 judge-found cross-job nondeterminism: with
     the range exchange NOT materialized, the counts job and the output
