@@ -25,6 +25,13 @@ BUDGETS = {
     "text_chunk_windows": (0, 0, 0),
     "text_nfc_normalize": (0, 0, 1),
     "mm_image_decode": (0, 0, 1),
+    # the other decodes that read the documents scan without a
+    # repartition: one Python node, zero exchanges
+    "mm_image_decode_png": (0, 0, 1),
+    "mm_image_downsample": (0, 0, 1),
+    "mm_audio_decode_wav": (0, 0, 1),
+    "mm_audio_downsample": (0, 0, 1),
+    "mm_image_decode_gif": (0, 0, 1),
     # hash-agg families: one shuffle on their key
     "dedup_exact_documents": (1, 0, 0),
     "w3_sessionize": (1, 0, 0),
