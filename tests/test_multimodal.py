@@ -250,19 +250,40 @@ def test_mm_image_decode_png_matches_oracle(spark):
     assert _norm_rows(s_rows, sdf.columns) == _norm_rows(o_rows, rel.columns)
 
 
-def test_ascii_guard_raises_on_non_ascii_corpus(spark):
+@pytest.mark.parametrize("build", ["with_ppm_payload", "mm_image_decode_jpeg"])
+def test_ascii_guard_raises_on_non_ascii_corpus(spark, monkeypatch, build):
     """ADVICE r6: a non-ASCII corpus must fail LOUDLY in the payload
-    builders, not silently desynchronize the byte/char oracles."""
-    from pyspark.sql.utils import PythonException
-
-    from geo_db_spark.workload.multimodal import with_ppm_payload
+    builders, not silently desynchronize the byte/char oracles — both
+    in the PPM payload builder and in a text-derived decode that runs
+    through the `_map_docs` harness (the documents scan is swapped for
+    the two-row frame)."""
+    from geo_db_spark.workload import multimodal as mm
 
     docs = spark.createDataFrame(
         [(1, "plain ascii text here xx"), (2, "café au lait non-ascii")],
         "doc_id long, text string",
     )
+    if build == "with_ppm_payload":
+        out = mm.with_ppm_payload(docs)
+    else:
+        monkeypatch.setattr(mm, "load", lambda spark, sf_dir, table: docs)
+        out = mm.mm_image_decode_jpeg(spark, "unused")
     with pytest.raises(Exception, match="non-ASCII|USER_RAISED"):
-        with_ppm_payload(docs).collect()
+        out.collect()
+
+
+def test_jpeg12_decode_rejects_non_12bit_raster(monkeypatch):
+    """The 12-bit decode hashes uint16 sample values; a decoder that
+    hands back another dtype must raise (an explicit check, so it also
+    holds under ``python -O``)."""
+    import numpy as np
+
+    from geo_db_spark.workload import multimodal as mm
+
+    assert mm._jpeg12_doc(1, b"abcd")[:2] == (32, 8)
+    monkeypatch.setattr(mm, "decode_jpeg", lambda payload: np.zeros((8, 32, 3), np.uint8))
+    with pytest.raises(ValueError, match="uint16"):
+        mm._jpeg12_doc(1, b"abcd")
 
 
 def test_decode_png_roundtrip_fuzz():
