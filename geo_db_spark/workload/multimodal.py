@@ -340,7 +340,7 @@ def mm_image_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces both straight from the text, so a decoder bug in
     ANY filter branch breaks the value hash."""
     tune(spark)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents")
 
     def per_doc(doc_id, raw):
         h, raster = _rgb_raster(raw)
@@ -399,7 +399,7 @@ def mm_audio_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 per-channel sums and total energy, which DuckDB reproduces
     straight from the text (byte==char guard as in the image paths)."""
     tune(spark)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents")
 
     def per_doc(doc_id, raw):
         wav = make_wav(8000, 2, _stereo_pcm(raw), junk_chunk=(int(doc_id) % 2 == 0))
@@ -436,7 +436,7 @@ def mm_audio_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     text with the same stride arithmetic (source frame 4j = text bytes
     8j+1 / 8j+2)."""
     tune(spark)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents")
 
     def per_doc(doc_id, raw):
         arr, rate = decode_audio(make_wav(8000, 2, _stereo_pcm(raw)))
@@ -474,7 +474,7 @@ def mm_image_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded RGB = each index tripled, so DuckDB reproduces the pixel
     md5 with a regex char-tripling of the text."""
     tune(spark)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents")
 
     def per_doc(doc_id, raw):
         h = len(raw) // PPM_W
@@ -556,7 +556,7 @@ def mm_image_decode_bmp_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 with a regex char-tripling (same construction as the GIF and
     PNG decode oracles — one per real decoder)."""
     tune(spark)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents")
 
     def per_doc(doc_id, raw):
         h = len(raw) // PPM_W
