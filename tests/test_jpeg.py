@@ -420,3 +420,60 @@ def test_truncated_dqt_raises_clear_error():
         )
         with pytest.raises(ValueError, match="truncated DQT"):
             decode_jpeg(bad)
+
+
+def _encoder_blocks(seed, n, dc_span, ac_span):
+    """Seeded block mix for the encoder-bytes pin: dense, sparse (long
+    zero runs -> ZRL), DC-only, all-zero (cross-block EOB runs) and a
+    last-coefficient-set block (no trailing EOB)."""
+    rng = np.random.RandomState(seed)
+    zz = np.zeros((n, 64), np.int64)
+    for i in range(n):
+        kind = i % 5
+        if kind == 0:
+            zz[i] = rng.randint(-30, 31, 64)
+        elif kind == 1:
+            pos = rng.choice(np.arange(1, 64), 3, replace=False)
+            zz[i, pos] = rng.randint(-ac_span, ac_span + 1, 3)
+        elif kind == 3:
+            zz[i, 63] = rng.randint(1, ac_span + 1)
+        if kind != 4:
+            zz[i, 0] = rng.randint(-dc_span, dc_span + 1)
+    return zz
+
+
+def test_jpeg_encoder_bytes_pinned():
+    """The coefficient-domain encoders are integer-only, so their output
+    bytes are platform-independent: pin sha256 of each variant. Decode
+    tests cannot see an encoder that changes bytes but still decodes to
+    the same coefficients; this can."""
+    import hashlib
+
+    from geo_db_spark.operators.jpeg import make_jpeg_gray_progressive_from_blocks
+
+    zz8 = _encoder_blocks(21, 30, 1000, 1000)
+    zz12 = _encoder_blocks(22, 12, 16000, 1000)
+    q16 = np.full((8, 8), 300, np.int64)
+    q16[0, 0] = 7
+    deep = (
+        (0, 0, 0, 2), (1, 63, 0, 2),
+        (0, 0, 2, 1), (1, 63, 2, 1),
+        (0, 0, 1, 0), (1, 63, 1, 0),
+    )
+    streams = {
+        "baseline8_rst": make_jpeg_gray_from_blocks(zz8, 6, 5, restart_interval=4),
+        "ext12_dqt16": make_jpeg_gray_from_blocks(
+            zz12, 4, 3, quant=q16, precision=12, restart_interval=5
+        ),
+        "prog_rst": make_jpeg_gray_progressive_from_blocks(
+            zz8, 6, 5, restart_interval=7
+        ),
+        "prog_deep": make_jpeg_gray_progressive_from_blocks(zz8, 6, 5, scans=deep),
+    }
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in streams.items()}
+    assert got == {
+        "baseline8_rst": "4338be353c6791c58118e1ee2a3512b1094e5b83b87523846418632a0c55669d",
+        "ext12_dqt16": "b6970de7f763a81f99f329614e5e81dd4432fe541e3fe4709d5a6728065ede3a",
+        "prog_rst": "8403a57e712e55f2c0dcf43e244ef89c53a39469e1038c880ac939d4f54668ec",
+        "prog_deep": "9888e458e65744c62da23d31247f24c505dfa2eca40fa2e508e84b8eea7418db",
+    }
