@@ -283,7 +283,7 @@ def _jpeg12_doc(doc_id, raw: bytes) -> tuple:
     arr = decode_jpeg(_dc_jpeg(raw, make_jpeg_gray_from_blocks, level=16, precision=12))
     if arr.dtype != np.uint16:
         raise ValueError(f"12-bit JPEG decoded to {arr.dtype}, expected uint16")
-    s = "".join(str(v) for v in arr[:, :, 0].ravel())
+    s = "".join(map(str, arr[:, :, 0].ravel().tolist()))
     return arr.shape[1], arr.shape[0], hashlib.md5(s.encode()).hexdigest()
 
 

@@ -20,6 +20,7 @@ is pathological for per-level-job engines.
 
 from __future__ import annotations
 
+import os
 import sqlite3
 
 import pytest
@@ -192,6 +193,9 @@ def _spark_tables(spark):
 
 
 @pytest.mark.slow
+@pytest.mark.skipif(
+    not os.path.isdir(REF), reason=f"reference SQL checkout missing: {REF}"
+)
 def test_post_parity_with_reference_sql(spark):
     from geo_db_spark.plans.geo_post import post_process
 
