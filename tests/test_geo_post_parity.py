@@ -123,6 +123,19 @@ OBJECT_LABELS = [
 ]
 MISSING_P17 = [("QM1",)]
 
+# A subdivision that is also an unlabeled city: QT9 (is_2nd, parent QT3,
+# speaks beta, one beta label) is its own 2nd (step 0) and QC8's, so
+# both D6 walks seed it. Spark-side pin only: a two-city subdivision
+# hits per_subdivision.sql's one-arbitrary-city quirk (module docstring).
+SHARED_SUBDIVISION = {
+    "territorial_entities": [("QT9", 1, "X-9")],
+    "territorial_entities_parents": [("QC8", "QT9"), ("QT9", "QT3")],
+    "object_languages": [("QT9", "QLb", 0)],
+    "cities": [("QC8", None, 80, None, None), ("QT9", None, 90, None, None)],
+    "cities_countries": [("QC8", 0, "Q1"), ("QT9", 0, "Q2")],
+    "object_labels": [("QC8", "alpha", 0, "CityEight"), ("QT9", "beta", None, "SubNine")],
+}
+
 
 def _sqlite_oracle():
     conn = sqlite3.connect(":memory:")
@@ -171,25 +184,51 @@ def _sqlite_oracle():
     return sorted(cities), sorted(labels), sorted(langs)
 
 
-def _spark_tables(spark):
+def _spark_tables(spark, extra=None):
+    """The fixture as Spark tables; ``extra`` maps table name -> rows
+    appended to that table's fixture rows."""
+    rows = lambda name, base: base + (extra or {}).get(name, [])  # noqa: E731
     mk = spark.createDataFrame
     return {
         "countries": mk(COUNTRIES, "id string, iso string"),
         "languages": mk(LANGUAGES, "id string, code string"),
-        "object_languages": mk(OBJECT_LANGUAGES, "id string, lang_id string, lang_index int"),
+        "object_languages": mk(
+            rows("object_languages", OBJECT_LANGUAGES), "id string, lang_id string, lang_index int"
+        ),
         "territorial_entities": mk(
-            [(i, bool(b), iso) for i, b, iso in TERRITORIAL_ENTITIES],
+            [(i, bool(b), iso) for i, b, iso in rows("territorial_entities", TERRITORIAL_ENTITIES)],
             "id string, is_2nd boolean, iso string",
         ),
-        "territorial_entities_parents": mk(TE_PARENTS, "id string, parent string"),
+        "territorial_entities_parents": mk(
+            rows("territorial_entities_parents", TE_PARENTS), "id string, parent string"
+        ),
         "cities": mk(
-            [(i, p, la, lo) for i, _c, p, la, lo in CITIES],
+            [(i, p, la, lo) for i, _c, p, la, lo in rows("cities", CITIES)],
             "id string, population long, lat double, lon double",
         ),
-        "cities_countries": mk(CITIES_COUNTRIES, "city string, priority int, country string"),
-        "object_labels": mk(OBJECT_LABELS, "id string, lang string, native_order int, label string"),
+        "cities_countries": mk(
+            rows("cities_countries", CITIES_COUNTRIES), "city string, priority int, country string"
+        ),
+        "object_labels": mk(
+            rows("object_labels", OBJECT_LABELS), "id string, lang string, native_order int, label string"
+        ),
         "missing_p17": mk(MISSING_P17, "id string"),
     }
+
+
+def _sorted_outputs(outs):
+    cities = sorted(
+        tuple(r)
+        for r in outs["cities"]
+        .select(
+            "id", "country", "population", "lat", "lon", "2nd_id",
+            "native_label", "eo_label", "2nd_native_label", "2nd_eo_label", "2nd_iso",
+        )
+        .collect()
+    )
+    labels = sorted(tuple(r) for r in outs["cities_labels"].collect())
+    langs = sorted(tuple(r) for r in outs["cities_languages"].collect())
+    return cities, labels, langs
 
 
 @pytest.mark.slow
@@ -201,19 +240,48 @@ def test_post_parity_with_reference_sql(spark):
 
     o_cities, o_labels, o_langs = _sqlite_oracle()
 
-    outs = post_process(_spark_tables(spark))
-    s_cities = sorted(
-        tuple(r)
-        for r in outs["cities"]
-        .select(
-            "id", "country", "population", "lat", "lon", "2nd_id",
-            "native_label", "eo_label", "2nd_native_label", "2nd_eo_label", "2nd_iso",
-        )
-        .collect()
-    )
-    s_labels = sorted(tuple(r) for r in outs["cities_labels"].collect())
-    s_langs = sorted(tuple(r) for r in outs["cities_languages"].collect())
+    s_cities, s_labels, s_langs = _sorted_outputs(post_process(_spark_tables(spark)))
 
     assert s_cities == o_cities
     assert s_labels == o_labels
     assert s_langs == o_langs
+
+
+# post_process on the fixture plus SHARED_SUBDIVISION. Covers the diamond
+# (QC2 -> QT8), multi-depth paths (QC7 -> QT5 at step 3), the
+# per_subdivision fallback (QT8, QT5), and QT9 resolved by both D6 walks.
+PIN_CITIES = [
+    ("QC1", "aa", 1000, 1.5, 2.5, "QT2", "CityOne / StadtEins", "UrboUnu", "RegionTwo", None, "X-2"),
+    ("QC2", "aa", 2000, None, None, "QT8", "ChengTwo", None, "SubEight", None, "X-8"),
+    ("QC4", "aa", 40, None, None, None, "CityFour / ChengFour", None, None, None, None),
+    ("QC6", "bb", 60, None, None, None, None, "UrboSes", None, None, None),
+    ("QC7", "aa", 70, None, None, "QT5", "CitySeven", None, "SubFive", None, "X-5"),
+    ("QC8", "aa", 80, None, None, "QT9", "CityEight", None, "SubNine", None, "X-9"),
+    ("QT9", "bb", 90, None, None, "QT9", "SubNine", None, "SubNine", None, "X-9"),
+]
+PIN_LABELS = [
+    ("QC1", "alpha", "CityOne"),
+    ("QC1", "beta", "StadtEins"),
+    ("QC1", "eo", "UrboUnu"),
+    ("QC2", "beta", "StadtZwei"),
+    ("QC2", "zh-hans", "ChengTwo"),
+    ("QC4", "alpha", "CityFour"),
+    ("QC4", "zh-hant", "ChengFour"),
+    ("QC6", "eo", "UrboSes"),
+    ("QC7", "alpha", "CitySeven"),
+    ("QC8", "alpha", "CityEight"),
+    ("QT9", "beta", "SubNine"),
+]
+PIN_LANGS = [("QT9", "beta", 0)]
+
+
+def test_post_process_fixture_pin(spark):
+    """Exact outputs on the fixture, with no reference checkout needed."""
+    from geo_db_spark.plans.geo_post import post_process
+
+    cities, labels, langs = _sorted_outputs(
+        post_process(_spark_tables(spark, SHARED_SUBDIVISION))
+    )
+    assert cities == PIN_CITIES
+    assert labels == PIN_LABELS
+    assert langs == PIN_LANGS

@@ -79,6 +79,9 @@ BUDGETS = {
     # (plan shows no scan/python nodes past it); downstream = dedup agg
     # + final rollup exchanges only
     "mm_corpus_pipeline": (2, 0, 0),
+    # the one registry query on the D6 ancestor-label resolver: its own
+    # closure + resolve measured 2 exchanges (3 broadcasts, 6 scans)
+    "x9_ancestor_label_resolution": (2, 0, 0),
 }
 
 
