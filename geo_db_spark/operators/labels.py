@@ -26,7 +26,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from geo_db_spark.functions.scalars import lang_family
-from geo_db_spark.operators.closure import transitive_closure
 
 SEP = " / "
 
@@ -70,37 +69,30 @@ def native_label_concat(
 
 
 def resolve_labels_via_ancestors(
-    seeds: DataFrame,
-    edges: DataFrame,
+    closure: DataFrame,
     object_languages: DataFrame,
     languages: DataFrame,
     object_labels: DataFrame,
-    out_col: str = "native_label",
-    max_steps: int = 100,
-    closure_fn=None,
 ) -> DataFrame:
     """D6 set-based rewrite (per_city.sql / per_subdivision.sql): for every
-    seed id at once —
+    seed of ``closure`` at once —
 
-    1. ancestor closure (step < 100) including the seed at step 0;
-    2. each ancestor's languages (object_languages ⋈ languages);
-    3. the SEED's own labels whose lang matches the ancestor-language code
+    1. each ancestor's languages (object_languages ⋈ languages);
+    2. the SEED's own labels whose lang matches the ancestor-language code
        exactly or by family prefix;
-    4. one label per (step, ancestor, language) group [deterministic pick];
-    5. the first TWO groups by (step ASC, lang_index ASC) [+ tiebreaks];
-    6. DISTINCT labels, ' / '-concat in group order.
+    3. one label per (step, ancestor, language) group [deterministic pick];
+    4. the first TWO groups by (step ASC, lang_index ASC) [+ tiebreaks];
+    5. DISTINCT labels, ' / '-concat in group order.
 
-    Returns (seed, out_col) for seeds that resolved ≥1 label.
+    ``closure`` is the ancestor closure (operators.closure,
+    step < 100, the seed itself at step 0) of exactly the seeds to
+    resolve, with ONE row per distinct (seed, id, step): multi-path DAGs
+    duplicate rows, and the reference's GROUP BY collapses them. The
+    caller builds, dedups and limits it, so one closure can feed other
+    stages too (plans/geo_post.py shares it with D3).
+
+    Returns (seed, native_label) for seeds that resolved ≥1 label.
     """
-    sd = seeds.select(F.col(seeds.columns[0]).alias("id"))
-    # closure_fn swaps the closure strategy (e.g. transitive_closure_-
-    # doubling when the hierarchy is a tree/DAG whose depth dominates —
-    # on trees min-step and all-paths closures coincide)
-    closure = (closure_fn or transitive_closure)(edges, sd, max_steps=max_steps)
-    # multi-path DAGs duplicate (seed, id, step) rows; the GROUP BY in the
-    # reference collapses them — dedupe here to keep the joins lean
-    closure = closure.dropDuplicates(["seed", "id", "step"])
-
     anc_langs = (
         closure.join(
             object_languages.select(
@@ -156,7 +148,7 @@ def resolve_labels_via_ancestors(
             F.col("seed"),
             F.array_join(
                 F.array_distinct(F.transform("a", lambda s: s["__v"])), SEP
-            ).alias(out_col),
+            ).alias("native_label"),
         )
     )
 

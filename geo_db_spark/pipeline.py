@@ -93,7 +93,6 @@ def build_geo_db(
     class_sets,
     out_dir: str | None = None,
     now_key: int = NOW_KEY_DEFAULT,
-    max_steps: int = 100,
 ) -> dict[str, DataFrame]:
     """Full build: ingest + post-process. Returns the three final tables
     (and persists everything under ``out_dir`` when given)."""
@@ -102,7 +101,7 @@ def build_geo_db(
         out_dir=f"{out_dir}/raw" if out_dir else None,
         now_key=now_key,
     )
-    finals = post_process(tables, max_steps=max_steps)
+    finals = post_process(tables)
     if out_dir:
         persisted = {}
         for name in FINAL_TABLES:

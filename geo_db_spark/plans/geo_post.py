@@ -8,8 +8,9 @@ derives a new DataFrame, and the stage ordering carries the same data
 dependencies (e.g. D7 only fills what D6 left NULL).
 
 The two row-at-a-time loops (per_city.sql, per_subdivision.sql driven by
-src/post/mod.rs:96-107) are replaced by ONE set-based job each — see
-geo_db_spark.operators.labels.
+src/post/mod.rs:96-107) are replaced by ONE set-based resolve for both —
+a seed's label depends only on the seed — over ONE ancestor closure that
+D3 shares; see geo_db_spark.operators.labels.
 
 Determinism: all SQLite arbitrary-winner spots carry documented
 tiebreaks (see operators/labels.py docstring and inline notes below).
@@ -45,13 +46,18 @@ from geo_db_spark.operators.labels import (
     resolve_labels_via_ancestors,
 )
 from geo_db_spark.operators.relational import anti_join, dedup_by_key, semi_join
+from geo_db_spark.operators.rounds import checkpoint_round
+
+# the reference's recursion bound (find_subdivision.sql, per_city.sql:
+# WHERE step < 100)
+MAX_STEPS = 100
 
 
-def _fill(df: DataFrame, updates: DataFrame, key: str, col: str, update_key: str | None = None) -> DataFrame:
-    """UPDATE df SET col = updates.col WHERE df.key = updates.update_key,
-    only filling NULLs (stage semantics: later label stages only touch
-    rows earlier stages left unresolved)."""
-    u = updates.select(F.col(update_key or key).alias(key), F.col(col).alias("__new"))
+def _fill(df: DataFrame, updates: DataFrame, key: str, col: str) -> DataFrame:
+    """UPDATE df SET col = <updates' 2nd column> WHERE df.key = <updates'
+    1st column>, only filling NULLs (stage semantics: later label stages
+    only touch rows earlier stages left unresolved)."""
+    u = updates.toDF(key, "__new")
     return (
         df.join(u, key, "left")
         .withColumn(col, F.coalesce(F.col(col), F.col("__new")))
@@ -59,19 +65,12 @@ def _fill(df: DataFrame, updates: DataFrame, key: str, col: str, update_key: str
     )
 
 
-def post_process(
-    tables: dict[str, DataFrame],
-    max_steps: int = 100,
-    checkpoint: bool = True,
-) -> dict[str, DataFrame]:
-    """``checkpoint`` inserts lineage barriers (lazy localCheckpoint) at
-    stage boundaries: every downstream output re-reads the materialized
-    stage instead of recomputing the whole compounded plan. On a real
-    cluster the equivalent is writing stage outputs to parquet
-    (the reference's SQLite tables play the same role)."""
-    def _barrier(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if checkpoint else df
-
+def post_process(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """Every stage that later stages re-read is materialized by
+    ``checkpoint_round`` (lazy localCheckpoint): downstream outputs
+    re-read it instead of recomputing the whole compounded plan. On a
+    real cluster the equivalent is writing stage outputs to parquet (the
+    reference's SQLite tables play the same role)."""
     countries = tables["countries"]
     object_languages = tables["object_languages"]
     languages = tables["languages"]
@@ -99,17 +98,26 @@ def post_process(
     )
     cities = cities.join(picked, "id", "left")  # country NULL when none
 
+    # ---- ancestor closure, shared by D3 and both D6 loops ------------
+    # seeded by cities and subdivisions. Admin-hierarchy edges are bounded
+    # (~1e6 for all of WikiData): safe to pin the broadcast and make every
+    # recursion level shuffle-free. All-paths rows collapse to one per
+    # (seed, id, step); D4's "deepest" pick on diamonds and multi-depth
+    # paths needs every step, so no min-step dedup.
+    seconds = tes.filter(F.col("is_2nd")).select("id")
+    closure, _ = checkpoint_round(
+        transitive_closure(
+            edges,
+            cities.select("id").unionByName(seconds),
+            max_steps=MAX_STEPS,
+            broadcast_edges=True,
+        ).dropDuplicates(["seed", "id", "step"])
+    )
+
     # ---- find_subdivision.sql (D3 + D4) -----------------------------
-    # admin-hierarchy edges are bounded (~1e6 for all of WikiData): safe
-    # to pin the broadcast and make every recursion level shuffle-free
-    closure = transitive_closure(
-        edges, cities.select("id"), max_steps=max_steps, broadcast_edges=True
-    )
-    deepest = deepest_qualifying_ancestor(
-        closure.dropDuplicates(["seed", "id", "step"]),
-        tes.filter(F.col("is_2nd")).select("id"),
-    )
-    cities = _barrier(
+    # subdivision-seeded rows that are not cities drop out in the join
+    deepest = deepest_qualifying_ancestor(closure, seconds)
+    cities, _ = checkpoint_round(
         cities.join(
             deepest.select(F.col("seed").alias("id"), F.col("id").alias("2nd_id")),
             "id",
@@ -121,16 +129,22 @@ def post_process(
     # native-label concat per CITY id; also reused by subdivision_labels
     # (the reference's labels_inner scans `cities`, so only subdivisions
     # that are themselves cities are covered there — faithful quirk)
-    city_native = native_label_concat(cities.select("id"), object_labels).cache()
+    city_native, _ = checkpoint_round(native_label_concat(cities.select("id"), object_labels))
     cities = cities.join(city_native, "id", "left")
 
-    # ---- per_city.sql loop (D6, set-based) --------------------------
-    unlabeled = cities.filter(F.col("native_label").isNull()).select("id")
-    resolved = resolve_labels_via_ancestors(
-        unlabeled, edges, object_languages, languages, object_labels,
-        out_col="native_label", max_steps=max_steps,
+    # ---- per_city.sql + per_subdivision.sql loops (D6, one resolve) --
+    # seeds: cities with no D5 label, and subdivisions with no D5 label
+    # (2nd_native_label is filled only from city_native before D6)
+    unlabeled = cities.filter(F.col("native_label").isNull()).select("id").unionByName(
+        anti_join(cities.select(F.col("2nd_id").alias("id")).dropna(), city_native, "id")
     )
-    cities = _fill(cities, resolved, "id", "native_label", update_key="seed")
+    resolved, _ = checkpoint_round(
+        resolve_labels_via_ancestors(
+            semi_join(closure, unlabeled.toDF("seed"), "seed"),
+            object_languages, languages, object_labels,
+        )
+    )
+    cities = _fill(cities, resolved, "id", "native_label")
 
     # ---- city_labels_by_country.sql (D7) ----------------------------
     targets = (
@@ -141,7 +155,7 @@ def post_process(
         targets, countries, object_languages, languages, object_labels,
         out_col="native_label",
     )
-    cities = _barrier(_fill(cities, by_country, "id", "native_label", update_key="target_id"))
+    cities, _ = checkpoint_round(_fill(cities, by_country, "id", "native_label"))
 
     # ---- esperanto_city_labels.sql (D8) -----------------------------
     cities = cities.join(eo_label_pick(cities.select("id"), object_labels), "id", "left")
@@ -155,17 +169,8 @@ def post_process(
         "left",
     )
 
-    # ---- per_subdivision.sql loop (D6 on distinct subdivisions) -----
-    sub_unlabeled = (
-        cities.filter(F.col("2nd_native_label").isNull() & F.col("2nd_id").isNotNull())
-        .select(F.col("2nd_id").alias("id"))
-        .distinct()
-    )
-    sub_resolved = resolve_labels_via_ancestors(
-        sub_unlabeled, edges, object_languages, languages, object_labels,
-        out_col="2nd_native_label", max_steps=max_steps,
-    )
-    cities = _fill(cities, sub_resolved, "2nd_id", "2nd_native_label", update_key="seed")
+    # ---- per_subdivision.sql loop (D6, resolved above) --------------
+    cities = _fill(cities, resolved, "2nd_id", "2nd_native_label")
 
     # ---- subdivision_labels_by_country.sql (D7 keyed by 2nd_id) -----
     # the reference takes the country of an ARBITRARY city of the
@@ -181,9 +186,7 @@ def post_process(
         sub_targets, countries, object_languages, languages, object_labels,
         out_col="2nd_native_label",
     )
-    cities = _barrier(
-        _fill(cities, sub_by_country, "2nd_id", "2nd_native_label", update_key="target_id")
-    )
+    cities, _ = checkpoint_round(_fill(cities, sub_by_country, "2nd_id", "2nd_native_label"))
 
     # ---- esperanto_subdivision_labels.sql ---------------------------
     sub_eo = eo_label_pick(
@@ -240,7 +243,7 @@ def post_process(
         F.col("native_label").isNotNull() | F.col("eo_label").isNotNull()
     )
 
-    cities = _barrier(
+    cities, _ = checkpoint_round(
         cities.select(
             "id", "country", "population", "lat", "lon",
             "2nd_id", "native_label", "eo_label",

@@ -2,7 +2,7 @@
 
 Round-3 gap (VERDICT "Next round" #4): the hardest post-phase operator —
 ancestor label resolution with the language-family prefix OR-join
-(operators/labels.py:72-157, reference src/post/per_city.sql:1-44) — was
+(operators/labels.py:71-153, reference src/post/per_city.sql:1-44) — was
 verified only by sqlite-parity pytest. Here the REAL operators run over
 synthetic wikidata-shaped tables derived DETERMINISTICALLY from the
 driver's part/nation/customer parquet (the driver ships no label tables),
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geo_db_spark.io import load
+from geo_db_spark.operators.closure import transitive_closure
 from geo_db_spark.operators.labels import labels_by_country, resolve_labels_via_ancestors
 from geo_db_spark.session import tune
 
@@ -106,8 +107,9 @@ def x9_ancestor_label_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
+    closure = transitive_closure(edges, seeds).dropDuplicates(["seed", "id", "step"])
     out = resolve_labels_via_ancestors(
-        seeds, edges, object_languages, _languages(spark, sf_dir), object_labels
+        closure, object_languages, _languages(spark, sf_dir), object_labels
     )
     return out.select("seed", "native_label")
 
