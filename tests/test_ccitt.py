@@ -387,3 +387,47 @@ def test_golden_g3_2d_chained_extended_makeups():
     assert list(out[0:5400]) == row0
     assert list(out[5400:10800]) == row0
     assert list(out[10800:]) == [0] * 100 + [1] * 5236 + [0] * 64
+
+
+def test_ccitt_encoder_bytes_pinned():
+    """The fax encoders' output bytes for a seeded 2700-wide raster:
+    extended makeups past 2560, zero-length white runs, and rows that
+    differ from their reference by small flips (Vertical, Pass and
+    Horizontal modes). Pins the bit writer independently of the
+    decoder."""
+    import hashlib
+
+    from geo_db_spark.operators.ccitt import encode_g3, encode_mh
+
+    rng = np.random.RandomState(33)
+    w, h = 2700, 7
+    row = np.zeros(w, np.uint8)
+    x, c = 0, 0
+    for r in [5, 70, 1800, 3, 2, 600, 190]:
+        row[x : x + r] = c
+        x += r
+        c ^= 1
+    row[x:] = c
+    rows = [row.copy()]
+    for y in range(1, h):
+        row = row.copy()
+        for _ in range(6):
+            a = rng.randint(0, w - 40)
+            row[a : a + rng.randint(1, 40)] ^= 1
+        if y == 3:
+            row[:] = 1  # all black: the row opens with a zero-length white run
+        rows.append(row.copy())
+    px = np.stack(rows).tobytes()
+    streams = {
+        "g4": encode_g4(px, w, h),
+        "g4_no_eofb": encode_g4(px, w, h, with_eofb=False),
+        "mh": encode_mh(px, w, h),
+        "g3_2d": encode_g3(px, w, h, two_d=True),
+    }
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in streams.items()}
+    assert got == {
+        "g4": "6852938644385e93c4a12bf3015f2bb88f4860bcb3ce5ef19f5c5abe1571982c",
+        "g4_no_eofb": "ef8ee7cec7f5407beca7a0709a2544a4a9c33a612b9f28942f858b5ae2396ade",
+        "mh": "c06f8776cc757bb24cd9f3a85054bfacf97d3da945e11306fdecbb4bd6fa5cb1",
+        "g3_2d": "be698ae4bf92df967a7e0f86890ed0667aa3efdf038d63810f459991359a7a3a",
+    }

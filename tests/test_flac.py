@@ -325,3 +325,36 @@ def test_flac_variable_block_roundtrip_and_mismatch_guard():
     bad[idx + 4] = 65
     with pytest.raises(ValueError):
         decode_flac(bytes(bad))
+
+
+def test_flac_encoder_bytes_pinned():
+    """make_flac is integer-only, so its output bytes are platform-
+    independent: pin sha256 of each channel mode, variable blocking and
+    the 24-bit escape-coded residual path. A roundtrip cannot see a
+    writer and reader that change together; this can."""
+    import hashlib
+
+    rng = np.random.RandomState(31)
+    t = np.arange(700)
+    left = (3000 * np.sin(t / 9.0)).astype(np.int64) + rng.randint(-40, 41, 700)
+    right = left // 2 + rng.randint(-300, 301, 700)
+    st = np.stack([left, right], 1).astype("<i2").tobytes()
+    n24 = rng.randint(-(1 << 23), 1 << 23, 300).tolist()
+    pcm24 = bytes(b for v in n24 for b in (v & 0xFFFFFF).to_bytes(3, "little"))
+    streams = {
+        "independent": make_flac(44100, 2, st, block_size=192),
+        "left_side": make_flac(44100, 2, st, block_size=192, stereo_mode="left_side"),
+        "right_side": make_flac(44100, 2, st, block_size=192, stereo_mode="right_side"),
+        "mid_side": make_flac(44100, 2, st, block_size=192, stereo_mode="mid_side"),
+        "variable": make_flac(22050, 2, st, block_size=160, variable_block=True),
+        "mono24_escape": make_flac(48000, 1, pcm24, block_size=128, bits=24),
+    }
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in streams.items()}
+    assert got == {
+        "independent": "d0726723a98980633aee061b5cac7b7488b6cfb7ee62e4ec8959c50dc733a3c1",
+        "left_side": "2a1d51d3d5bf9b9e3af01382af44d9a52391d2a96f802c8c37ecc6b32fbe023d",
+        "right_side": "27b65e629887aa7e83b02dee836bca3f5268bd2b8708c238cd920157bfef29c4",
+        "mid_side": "b53856753615ed516dd0403c76cb4ee8271280a719c4d80e5d1a5a78f34f8f5d",
+        "variable": "90f3fc23766c4a4270ebcf0ddff9497b9df07ce970cf58cd95d4015de8d8d990",
+        "mono24_escape": "9834c26163d1fb81b9b26da0e274f73ad533f370a0391997400aa874c5fd8079",
+    }

@@ -962,3 +962,29 @@ def test_g711_tables_and_wav_roundtrip():
             make_wav(8000, 2, out.astype("<i2").tobytes(), codec=codec)
         )
         assert (out2 == out).all(), codec
+
+
+def test_gif_encoder_bytes_pinned():
+    """make_gif bytes for a seeded noise raster (code-width growth and
+    the 4096-entry clear) and an interlaced small-alphabet raster with a
+    comment extension. Pins the LSB code packing independently of the
+    decoder."""
+    import hashlib
+
+    import numpy as np
+
+    from geo_db_spark.operators.multimodal import make_gif
+
+    rng = np.random.RandomState(35)
+    pal = bytes(bytearray(v for i in range(256) for v in (i, (i * 5) % 256, 255 - i)))
+    noise = rng.randint(0, 256, 90 * 90, dtype=np.uint8).tobytes()
+    runs = bytes(rng.randint(0, 4, 37 * 23, dtype=np.uint8))
+    streams = {
+        "noise_reset": make_gif(90, 90, noise, pal),
+        "runs_interlaced": make_gif(37, 23, runs, pal, comment=b"pin", interlace=True),
+    }
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in streams.items()}
+    assert got == {
+        "noise_reset": "c259b2eecb3af7b8d4b66008ab72adaaa8a9aae7b6c8f0021270b7993a55e8f7",
+        "runs_interlaced": "2d864db15a9c911b78f2260832c459a7edab0b790c713e9931457b6bdead607d",
+    }

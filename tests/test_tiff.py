@@ -411,3 +411,27 @@ def test_golden_fillorder2_hand_built_container():
     row = lambda bits_: [[0] * 3 if b else [255] * 3 for b in bits_]  # noqa: E731
     assert out[0].tolist() == row([0, 0, 1, 1, 1, 0, 0, 0])
     assert out[1].tolist() == row([0, 1, 1, 1, 1, 0, 0, 0])
+
+
+def test_tiff_lzw_encoder_bytes_pinned():
+    """make_tiff(compression='lzw') bytes for seeded rasters: a noise
+    strip long enough to pass every code-width bump and the 4094-entry
+    Clear, and a smooth predictor image split into strips."""
+    import hashlib
+
+    rng = np.random.RandomState(34)
+    noisy = rng.randint(0, 256, (48, 40, 3)).astype(np.uint8)
+    coarse = rng.randint(0, 256, (6, 5, 3))
+    smooth = np.repeat(np.repeat(coarse, 8, 0), 8, 1).astype(np.uint8)
+    streams = {
+        "lzw_noise": make_tiff(40, 48, noisy.tobytes(), compression="lzw"),
+        "lzw_smooth_pred": make_tiff(
+            40, 48, smooth.tobytes(), compression="lzw", predictor=True,
+            rows_per_strip=16,
+        ),
+    }
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in streams.items()}
+    assert got == {
+        "lzw_noise": "2e9b0f9eff6c494d56f16434d653b8f3ef0e9b810ef8dd36a4e55469ac96ec78",
+        "lzw_smooth_pred": "f4efacd745d167596296550e7fbcef6d8508ad4a4f457b5268460338a0ba0af8",
+    }

@@ -563,3 +563,34 @@ def test_golden_lz77_meta_huffman_combined():
     assert out.shape == (1, 8, 3)
     want = [[0, 10, 0], [0, 2, 0], [0, 2, 0], [0, 10, 0]] * 2
     assert out[0].tolist() == want
+
+
+def test_webp_encoder_bytes_pinned():
+    """make_webp's output bytes for seeded rasters: LZ77 + color cache,
+    meta-Huffman, subtract-green + predictor, and sub-byte palette
+    bundling. Pins the LSB writer and write_code's bit order, which a
+    roundtrip through the module's own reader cannot."""
+    import hashlib
+
+    rng = np.random.RandomState(32)
+    w, h = 13, 9
+    rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
+    rgb[2:5] = rgb[2, 0]  # flat band: LZ77 runs and cache hits
+    colors = np.array([[10, 20, 30], [200, 100, 0], [7, 7, 7]], np.uint8)
+    few = colors[rng.randint(0, 3, (h, w))]
+    streams = {
+        "lz77_cache": make_webp(w, h, rgb.tobytes(), use_lz77=True, cache_bits=4),
+        "meta_split": make_webp(w, h, rgb.tobytes(), meta_split=True),
+        "green_pred": make_webp(
+            w, h, rgb.tobytes(), transforms=("subtract_green", "predictor_left"),
+            use_lz77=True,
+        ),
+        "palette": make_webp(w, h, few.tobytes(), transforms=("palette",)),
+    }
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in streams.items()}
+    assert got == {
+        "lz77_cache": "5255c60cd91aedaac3bfcd7e06cd7e494580fe139625e3e3f1f38e5033166429",
+        "meta_split": "70813a2bdf995b9c25435b751e1cdf541fa10fad356032cc882a230a16c2dcc6",
+        "green_pred": "62703ab9df4c1c4484545ea93977ce55d2cd4808966b7d5e0e97714800af7b17",
+        "palette": "d9fb6d39b2f9b01332adcd7985a7ef26352d0e68a11f4c837829908fcb533b34",
+    }
