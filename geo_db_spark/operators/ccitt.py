@@ -19,6 +19,11 @@ Pure-Python decode (and fixture encoder twins) of:
   the previous row — the 2-D row grammar is byte-identical to T.6's,
   so the mode decoder below is shared.
 
+Bit order: MSB-first (operators/bitio.py's MsbReader/MsbWriter; tiff.py
+reverses FillOrder=2 strips before they get here). Decoding peeks 14
+bits as an integer and looks codes up by (length, code int); the
+encoder writes (code, length) pairs.
+
 The code tables below are transcribed from the PUBLIC ITU-T T.4
 Recommendation (Tables 1-3) — tests pin structural soundness (both
 alphabets are prefix-free, complete against the spec counts) and
@@ -35,6 +40,8 @@ codecs at all — this belongs to the SURVEY §2-H engine-growth surface
 """
 
 from __future__ import annotations
+
+from geo_db_spark.operators.bitio import MsbReader, MsbWriter
 
 # --------------------------------------------------------------- T.4 tables
 # (run length, codeword as a bit string). Terminating codes 0-63.
@@ -131,53 +138,30 @@ EOL = "000000000001"
 
 
 def _decode_map(term: dict, makeup: dict) -> dict:
+    """(code length, code int) -> (run, is_terminating)."""
     m = {}
-    for r, c in term.items():
-        m[c] = (r, True)
-    for r, c in makeup.items():
-        m[c] = (r, False)
-    for r, c in EXT_MAKEUP.items():
-        m[c] = (r, False)
+    for tbl, terminating in ((term, True), (makeup, False), (EXT_MAKEUP, False)):
+        for r, c in tbl.items():
+            m[(len(c), int(c, 2))] = (r, terminating)
     return m
 
 
 _WHITE_DEC = _decode_map(WHITE_TERM, WHITE_MAKEUP)
 _BLACK_DEC = _decode_map(BLACK_TERM, BLACK_MAKEUP)
+_MODE_DEC = {(len(c), int(c, 2)): mode for c, mode in MODE_CODES.items()}
 _MAX_CODE_LEN = 14
 
 
-class _Bits:
-    """MSB-first bit reader over bytes."""
-
-    __slots__ = ("data", "pos", "total")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.total = len(data) * 8
-
-    def peek_str(self, n: int) -> str:
-        out = []
-        for i in range(self.pos, min(self.pos + n, self.total)):
-            out.append("1" if (self.data[i >> 3] >> (7 - (i & 7))) & 1 else "0")
-        return "".join(out)
-
-    def skip(self, n: int) -> None:
-        self.pos += n
-
-    def align_byte(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-
-def _read_run(br: _Bits, white: bool) -> int:
+def _read_run(br: MsbReader, white: bool) -> int:
     """One MH run length: zero or more makeup codes then a terminating
-    code, each looked up longest-prefix in the color's table."""
+    code, each looked up shortest-first in the color's table (the codes
+    are prefix-free)."""
     table = _WHITE_DEC if white else _BLACK_DEC
     total = 0
     while True:
-        window = br.peek_str(_MAX_CODE_LEN)
+        window = br.peek(_MAX_CODE_LEN)
         for ln in range(2, _MAX_CODE_LEN + 1):
-            hit = table.get(window[:ln])
+            hit = table.get((ln, window >> (_MAX_CODE_LEN - ln)))
             if hit is not None:
                 br.skip(ln)
                 total += hit[0]
@@ -186,24 +170,24 @@ def _read_run(br: _Bits, white: bool) -> int:
                 break
         else:
             raise ValueError(
-                f"T.6: bad {'white' if white else 'black'} run code at bit "
-                f"{br.pos}: {window!r}"
+                f"T.6: bad {'white' if white else 'black'} run code "
+                f"{window:0{_MAX_CODE_LEN}b}"
             )
 
 
-def _read_mode(br: _Bits):
-    window = br.peek_str(_MAX_CODE_LEN)
+def _read_mode(br: MsbReader):
+    window = br.peek(_MAX_CODE_LEN)
     for ln in range(1, 8):
-        hit = MODE_CODES.get(window[:ln])
+        hit = _MODE_DEC.get((ln, window >> (_MAX_CODE_LEN - ln)))
         if hit is not None:
             br.skip(ln)
             return hit
-    if window.startswith(EOL):
+    if window >> (_MAX_CODE_LEN - len(EOL)) == 1:  # 000000000001
         return ("EOL", None)
-    raise ValueError(f"T.6: bad mode code at bit {br.pos}: {window!r}")
+    raise ValueError(f"T.6: bad mode code {window:0{_MAX_CODE_LEN}b}")
 
 
-def _decode_2d_row(br: _Bits, ref: list[int], width: int, y: int) -> list[int]:
+def _decode_2d_row(br: MsbReader, ref: list[int], width: int, y: int) -> list[int]:
     """One 2-D-coded row (shared by T.6 and T.4 2-D — the grammar is
     identical): Vertical/Horizontal/Pass modes against the reference
     row's changing elements. ``ref`` holds transition positions (color
@@ -251,7 +235,7 @@ def _decode_2d_row(br: _Bits, ref: list[int], width: int, y: int) -> list[int]:
     return cur
 
 
-def _decode_mh_row(br: _Bits, width: int, y: int) -> list[int]:
+def _decode_mh_row(br: MsbReader, width: int, y: int) -> list[int]:
     """One T.4 1-D (modified Huffman) row: alternating white/black runs
     summing exactly to the row width; a row that starts black opens
     with a zero-length white run."""
@@ -295,7 +279,7 @@ def decode_g4(data: bytes, width: int, height: int) -> bytes:
     first row's reference is an imaginary all-white line."""
     if width < 1 or height < 1:
         raise ValueError(f"T.6: bad dimensions {width}x{height}")
-    br = _Bits(data)
+    br = MsbReader(data)
     out = bytearray(width * height)
     ref: list[int] = []  # transitions of the (initially all-white) ref row
     for y in range(height):
@@ -305,17 +289,21 @@ def decode_g4(data: bytes, width: int, height: int) -> bytes:
     return bytes(out)
 
 
-def _skip_eol(br: _Bits, y: int) -> None:
+def _skip_eol(br: MsbReader, y: int) -> None:
     """Consume fill bits (zeros) plus one EOL: >= 11 zeros then a 1.
     T.4 §4.1.2: fill is any number of zeros inserted before an EOL, so
-    the combined pattern is 0{11,}1."""
+    the combined pattern is 0{11,}1. Past the end of the data the peek
+    sees 1-bits, which ends the zero scan."""
     zeros = 0
-    while br.pos < br.total and br.peek_str(1) == "0":
-        br.skip(1)
-        zeros += 1
+    while not br.peek(16):
+        br.skip(16)
+        zeros += 16
         if zeros > 4096:
             raise ValueError(f"T.4: runaway fill before EOL at row {y}")
-    if br.pos >= br.total or zeros < 11:
+    z = 16 - br.peek(16).bit_length()
+    br.skip(z)
+    zeros += z
+    if zeros < 11:
         raise ValueError(f"T.4: expected EOL before row {y} (got {zeros} zeros)")
     br.skip(1)  # the terminating 1
 
@@ -325,10 +313,10 @@ def decode_mh(data: bytes, width: int, height: int) -> bytes:
     rows, each starting on a byte boundary, no EOLs."""
     if width < 1 or height < 1:
         raise ValueError(f"T.4: bad dimensions {width}x{height}")
-    br = _Bits(data)
+    br = MsbReader(data)
     out = bytearray(width * height)
     for y in range(height):
-        br.align_byte()
+        br.align()
         cur = _decode_mh_row(br, width, y)
         _render_row(out, y * width, width, cur, y)
     return bytes(out)
@@ -343,19 +331,12 @@ def decode_g3(data: bytes, width: int, height: int, two_d: bool = False) -> byte
     independently). Trailing RTC/EOFB after the last row is ignored."""
     if width < 1 or height < 1:
         raise ValueError(f"T.4: bad dimensions {width}x{height}")
-    br = _Bits(data)
+    br = MsbReader(data)
     out = bytearray(width * height)
     ref: list[int] = []
     for y in range(height):
         _skip_eol(br, y)
-        one_d = True
-        if two_d:
-            tag = br.peek_str(1)
-            if tag == "":
-                raise ValueError(f"T.4: missing tag bit at row {y}")
-            br.skip(1)
-            one_d = tag == "1"
-        if one_d:
+        if not two_d or br.bits(1):  # 2-D tag bit: 1 = next row is 1-D
             cur = _decode_mh_row(br, width, y)
         else:
             cur = _decode_2d_row(br, ref, width, y)
@@ -367,40 +348,30 @@ def decode_g3(data: bytes, width: int, height: int, two_d: bool = False) -> byte
 # --------------------------------------------------------------- encoder
 
 
-class _BitW:
-    __slots__ = ("bits", "n")
-
-    def __init__(self):
-        self.bits: list[str] = []
-        self.n = 0
-
-    def put(self, s: str) -> None:
-        self.bits.append(s)
-        self.n += len(s)
-
-    def align_byte(self) -> None:
-        pad = (-self.n) % 8
-        if pad:
-            self.put("0" * pad)
-
-    def tobytes(self) -> bytes:
-        s = "".join(self.bits)
-        pad = (-len(s)) % 8
-        s += "0" * pad
-        return bytes(int(s[i : i + 8], 2) for i in range(0, len(s), 8))
+def _code(bits: str) -> tuple[int, int]:
+    """A table codeword as the (value, length) pair MsbWriter.write takes."""
+    return int(bits, 2), len(bits)
 
 
-def _emit_run(bw: _BitW, r: int, white: bool) -> None:
-    term = WHITE_TERM if white else BLACK_TERM
-    makeup = WHITE_MAKEUP if white else BLACK_MAKEUP
+_WHITE_ENC = ({r: _code(c) for r, c in WHITE_TERM.items()},
+              {r: _code(c) for r, c in WHITE_MAKEUP.items()})
+_BLACK_ENC = ({r: _code(c) for r, c in BLACK_TERM.items()},
+              {r: _code(c) for r, c in BLACK_MAKEUP.items()})
+_EXT_ENC = {r: _code(c) for r, c in EXT_MAKEUP.items()}
+_MODE_ENC = {m: _code(c) for c, m in MODE_CODES.items()}
+_EOL_CODE = _code(EOL)
+
+
+def _emit_run(bw: MsbWriter, r: int, white: bool) -> None:
+    term, makeup = _WHITE_ENC if white else _BLACK_ENC
     while r > 2560 + 63:
-        bw.put(EXT_MAKEUP[2560])
+        bw.write(*_EXT_ENC[2560])
         r -= 2560
     if r >= 64:
         mk = (r // 64) * 64
-        bw.put(EXT_MAKEUP[mk] if mk > 1728 else makeup[mk])
+        bw.write(*(_EXT_ENC[mk] if mk > 1728 else makeup[mk]))
         r -= mk
-    bw.put(term[r])
+    bw.write(*term[r])
 
 
 def _transitions(row, width: int) -> list[int]:
@@ -414,7 +385,7 @@ def _transitions(row, width: int) -> list[int]:
     return t
 
 
-def _encode_2d_row(bw: _BitW, ref: list[int], cur: list[int], width: int) -> None:
+def _encode_2d_row(bw: MsbWriter, ref: list[int], cur: list[int], width: int) -> None:
     """One 2-D row (shared by the G4 and G3-2D twins). Greedy standard
     mode selection: Pass when b2 < a1, Vertical when |a1-b1| <= 3,
     else Horizontal."""
@@ -429,18 +400,16 @@ def _encode_2d_row(bw: _BitW, ref: list[int], cur: list[int], width: int) -> Non
         b1 = ref[i] if i < len(ref) else width
         b2 = ref[i + 1] if i + 1 < len(ref) else width
         if b2 < a1:
-            bw.put("0001")
+            bw.write(*_MODE_ENC[("P", None)])
             a0 = b2
         elif abs(a1 - b1) <= 3:
-            d = a1 - b1
-            bw.put({0: "1", 1: "011", -1: "010", 2: "000011",
-                    -2: "000010", 3: "0000011", -3: "0000010"}[d])
+            bw.write(*_MODE_ENC[("V", a1 - b1)])
             a0 = a1
             color ^= 1
         else:
             a2 = next((t for t in cur if t > a1), width)
             start = a0 if a0 > 0 else 0
-            bw.put("001")
+            bw.write(*_MODE_ENC[("H", None)])
             _emit_run(bw, a1 - start, white=(color == 0))
             _emit_run(bw, a2 - a1, white=(color != 0))
             a0 = a2
@@ -448,7 +417,7 @@ def _encode_2d_row(bw: _BitW, ref: list[int], cur: list[int], width: int) -> Non
             break
 
 
-def _emit_mh_row(bw: _BitW, cur: list[int], width: int) -> None:
+def _emit_mh_row(bw: MsbWriter, cur: list[int], width: int) -> None:
     """One T.4 1-D row: alternating MH runs from the transition list
     (a leading black pixel yields a zero-length white run)."""
     pos = 0
@@ -465,7 +434,7 @@ def encode_g4(pixels: bytes, width: int, height: int, with_eofb: bool = True) ->
     raster (nonzero = black)."""
     if len(pixels) != width * height:
         raise ValueError("encode_g4: raster size mismatch")
-    bw = _BitW()
+    bw = MsbWriter()
     ref: list[int] = []
     for y in range(height):
         row = pixels[y * width : (y + 1) * width]
@@ -473,8 +442,9 @@ def encode_g4(pixels: bytes, width: int, height: int, with_eofb: bool = True) ->
         _encode_2d_row(bw, ref, cur, width)
         ref = cur
     if with_eofb:
-        bw.put(EOL + EOL)
-    return bw.tobytes()
+        bw.write(*_EOL_CODE)
+        bw.write(*_EOL_CODE)
+    return bw.getvalue()
 
 
 def encode_mh(pixels: bytes, width: int, height: int) -> bytes:
@@ -482,12 +452,12 @@ def encode_mh(pixels: bytes, width: int, height: int) -> bytes:
     no EOLs."""
     if len(pixels) != width * height:
         raise ValueError("encode_mh: raster size mismatch")
-    bw = _BitW()
+    bw = MsbWriter()
     for y in range(height):
-        bw.align_byte()
+        bw.align()
         row = pixels[y * width : (y + 1) * width]
         _emit_mh_row(bw, _transitions(row, width), width)
-    return bw.tobytes()
+    return bw.getvalue()
 
 
 def encode_g3(pixels: bytes, width: int, height: int, two_d: bool = False) -> bytes:
@@ -497,14 +467,14 @@ def encode_g3(pixels: bytes, width: int, height: int, two_d: bool = False) -> by
     rest 2-D."""
     if len(pixels) != width * height:
         raise ValueError("encode_g3: raster size mismatch")
-    bw = _BitW()
+    bw = MsbWriter()
     ref: list[int] = []
     for y in range(height):
         row = pixels[y * width : (y + 1) * width]
         cur = _transitions(row, width)
-        bw.put(EOL)
+        bw.write(*_EOL_CODE)
         if two_d:
-            bw.put("1" if y == 0 else "0")
+            bw.write(1 if y == 0 else 0, 1)
             if y == 0:
                 _emit_mh_row(bw, cur, width)
             else:
@@ -512,4 +482,4 @@ def encode_g3(pixels: bytes, width: int, height: int, two_d: bool = False) -> by
         else:
             _emit_mh_row(bw, cur, width)
         ref = cur
-    return bw.tobytes()
+    return bw.getvalue()

@@ -11,15 +11,16 @@ Scope: 8/16/24-bit PCM (r9 closed the non-16-bit boundary), 1-8
 independent channels plus the stereo left/side, right/side and
 mid/side decorrelations, CONSTANT / VERBATIM / FIXED (orders 0-4) /
 LPC (any order) subframes, Rice residual methods 0 and 1 with
-partitioning and escape codes, wasted bits, UTF-8 frame/sample
+partitioning and escape codes, wasted rd, UTF-8 frame/sample
 numbers, fixed AND variable blocking strategies (r9: variable-block
 sample numbers validated against the stream position), CRC-8 header
 and CRC-16 frame checks. Out of scope (explicit NotImplementedError):
 12/20/32-bit sample sizes and unknown-total streams — honest
 boundaries per the repo convention.
 
-Performance note: the entropy layer is a Python bit reader (Rice codes
-are data-dependent, no batch kernel without a native library); the
+Performance note: the entropy layer is a Python bit reader, MSB-first
+(operators/bitio.py's MsbReader/MsbWriter; Rice codes are data-
+dependent, no batch kernel without a native library); the
 prediction recurrences run per subframe in numpy where order allows.
 Fixture/corpus-demo scale — the mapInPandas seam above is the real,
 tested contract, as with JPEG/PNG/GIF.
@@ -30,6 +31,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from geo_db_spark.operators.bitio import MsbReader, MsbWriter
 
 _FIXED_COEF = {
     0: [],
@@ -58,51 +61,29 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _Bits:
-    """MSB-first bit reader over a bytes buffer."""
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.bitpos = pos * 8
-
-    def read(self, k: int) -> int:
-        v = 0
-        bp = self.bitpos
-        buf = self.buf
-        end = bp + k
-        if end > len(buf) * 8:
-            raise ValueError("FLAC bitstream truncated")
-        while k > 0:
-            byte = buf[bp >> 3]
-            avail = 8 - (bp & 7)
-            take = min(avail, k)
-            v = (v << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
-            bp += take
-            k -= take
-        self.bitpos = bp
-        return v
-
-    def signed(self, k: int) -> int:
-        v = self.read(k)
-        return v - (1 << k) if v >> (k - 1) else v
-
-    def unary(self) -> int:
-        n = 0
-        while self.read(1) == 0:
-            n += 1
-            if n > 1 << 20:
-                raise ValueError("runaway unary code")
-        return n
-
-    def align(self) -> None:
-        self.bitpos = (self.bitpos + 7) & ~7
-
-    def bytepos(self) -> int:
-        return self.bitpos >> 3
+def _signed(rd: MsbReader, k: int) -> int:
+    v = rd.bits(k)
+    return v - (1 << k) if v >> (k - 1) else v
 
 
-def _read_utf8_number(bits: _Bits) -> int:
-    b0 = bits.read(8)
+def _unary(rd: MsbReader) -> int:
+    """Count the zero bits before the next 1 and consume them with it,
+    16 bits per peek."""
+    n = 0
+    while True:
+        w = rd.peek(16)
+        if w:
+            z = 16 - w.bit_length()
+            rd.skip(z + 1)
+            return n + z
+        rd.skip(16)
+        n += 16
+        if n > 1 << 20:
+            raise ValueError("runaway unary code")
+
+
+def _read_utf8_number(rd: MsbReader) -> int:
+    b0 = rd.bits(8)
     if b0 < 0x80:
         return b0
     n = 0
@@ -112,7 +93,7 @@ def _read_utf8_number(bits: _Bits) -> int:
         raise ValueError("invalid UTF-8-coded frame number")
     v = b0 & (0x7F >> n)
     for _ in range(n - 1):
-        c = bits.read(8)
+        c = rd.bits(8)
         if c & 0xC0 != 0x80:
             raise ValueError("invalid UTF-8 continuation in frame number")
         v = (v << 6) | (c & 0x3F)
@@ -125,13 +106,13 @@ _BLOCKSIZE_TBL = {
 }
 
 
-def _decode_residual(bits: _Bits, n: int, pred_order: int) -> list:
-    method = bits.read(2)
+def _decode_residual(rd: MsbReader, n: int, pred_order: int) -> list:
+    method = rd.bits(2)
     if method > 1:
         raise ValueError(f"reserved residual method {method}")
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
-    porder = bits.read(4)
+    porder = rd.bits(4)
     nparts = 1 << porder
     if n % nparts:
         raise ValueError("partition count does not divide block size")
@@ -140,36 +121,36 @@ def _decode_residual(bits: _Bits, n: int, pred_order: int) -> list:
         cnt = n // nparts - (pred_order if p == 0 else 0)
         if cnt < 0:
             raise ValueError("predictor order exceeds first partition")
-        param = bits.read(pbits)
+        param = rd.bits(pbits)
         if param == escape:
-            raw = bits.read(5)
+            raw = rd.bits(5)
             for _ in range(cnt):
-                out.append(bits.signed(raw) if raw else 0)
+                out.append(_signed(rd, raw) if raw else 0)
         else:
             for _ in range(cnt):
-                q = bits.unary()
-                u = (q << param) | bits.read(param)
+                q = _unary(rd)
+                u = (q << param) | rd.bits(param)
                 out.append((u >> 1) ^ -(u & 1))
     return out
 
 
-def _decode_subframe(bits: _Bits, n: int, bps: int) -> np.ndarray:
-    if bits.read(1):
+def _decode_subframe(rd: MsbReader, n: int, bps: int) -> np.ndarray:
+    if rd.bits(1):
         raise ValueError("subframe padding bit set")
-    ftype = bits.read(6)
+    ftype = rd.bits(6)
     wasted = 0
-    if bits.read(1):
-        wasted = 1 + bits.unary()
+    if rd.bits(1):
+        wasted = 1 + _unary(rd)
         bps -= wasted
     if ftype == 0:  # CONSTANT
-        v = bits.signed(bps)
+        v = _signed(rd, bps)
         out = np.full(n, v, np.int64)
     elif ftype == 1:  # VERBATIM
-        out = np.array([bits.signed(bps) for _ in range(n)], np.int64)
+        out = np.array([_signed(rd, bps) for _ in range(n)], np.int64)
     elif 8 <= ftype <= 12:  # FIXED order 0-4
         order = ftype - 8
-        warm = [bits.signed(bps) for _ in range(order)]
-        res = _decode_residual(bits, n, order)
+        warm = [_signed(rd, bps) for _ in range(order)]
+        res = _decode_residual(rd, n, order)
         coef = _FIXED_COEF[order]
         s = warm[:]
         for r in res:
@@ -178,15 +159,15 @@ def _decode_subframe(bits: _Bits, n: int, bps: int) -> np.ndarray:
         out = np.array(s, np.int64)
     elif ftype >= 32:  # LPC, order = (type & 31) + 1
         order = (ftype & 31) + 1
-        warm = [bits.signed(bps) for _ in range(order)]
-        prec = bits.read(4) + 1
+        warm = [_signed(rd, bps) for _ in range(order)]
+        prec = rd.bits(4) + 1
         if prec == 16:
             raise ValueError("invalid LPC precision escape")
-        shift = bits.signed(5)
+        shift = _signed(rd, 5)
         if shift < 0:
             raise ValueError("negative LPC shift")
-        coef = [bits.signed(prec) for _ in range(order)]
-        res = _decode_residual(bits, n, order)
+        coef = [_signed(rd, prec) for _ in range(order)]
+        res = _decode_residual(rd, n, order)
         s = warm[:]
         for r in res:
             acc = sum(c * s[-i - 1] for i, c in enumerate(coef))
@@ -213,15 +194,12 @@ def decode_flac(payload: bytes):
         ln = int.from_bytes(hdr[1:4], "big")
         body = payload[pos + 4 : pos + 4 + ln]
         if btype == 0:  # STREAMINFO
-            b = _Bits(body)
-            b.read(16)  # min blocksize
-            b.read(16)  # max blocksize
-            b.read(24)
-            b.read(24)
-            rate = b.read(20)
-            nch = b.read(3) + 1
-            bps = b.read(5) + 1
-            total = b.read(36)
+            b = MsbReader(body)
+            b.skip(80)  # min/max blocksize, min/max frame size
+            rate = b.bits(20)
+            nch = b.bits(3) + 1
+            bps = b.bits(5) + 1
+            total = b.bits(36)
             info = {"rate": rate, "nch": nch, "bps": bps, "total": total}
         pos += 4 + ln
         if last:
@@ -241,18 +219,18 @@ def decode_flac(payload: bytes):
     chans = [[] for _ in range(nch)]
     got = 0
     while got < info["total"]:
-        bits = _Bits(payload, pos)
-        sync = bits.read(14)
+        rd = MsbReader(payload, pos)
+        sync = rd.bits(14)
         if sync != 0b11111111111110:
             raise ValueError(f"bad frame sync at byte {pos}")
-        bits.read(1)  # reserved
-        variable = bits.read(1)  # 0 = fixed, 1 = variable blocking
-        bs_code = bits.read(4)
-        sr_code = bits.read(4)
-        ch_code = bits.read(4)
-        ss_code = bits.read(3)
-        bits.read(1)  # reserved
-        coded_no = _read_utf8_number(bits)
+        rd.bits(1)  # reserved
+        variable = rd.bits(1)  # 0 = fixed, 1 = variable blocking
+        bs_code = rd.bits(4)
+        sr_code = rd.bits(4)
+        ch_code = rd.bits(4)
+        ss_code = rd.bits(3)
+        rd.bits(1)  # reserved
+        coded_no = _read_utf8_number(rd)
         if variable and coded_no != got:
             # variable blocking codes the frame's FIRST SAMPLE index
             raise ValueError(
@@ -261,15 +239,15 @@ def decode_flac(payload: bytes):
         if bs_code == 0:
             raise ValueError("reserved block size code 0")
         elif bs_code == 6:
-            n = bits.read(8) + 1
+            n = rd.bits(8) + 1
         elif bs_code == 7:
-            n = bits.read(16) + 1
+            n = rd.bits(16) + 1
         else:
             n = _BLOCKSIZE_TBL[bs_code]
         if sr_code == 12:
-            bits.read(8)
+            rd.bits(8)
         elif sr_code in (13, 14):
-            bits.read(16)
+            rd.bits(16)
         elif sr_code == 15:
             raise ValueError("invalid sample rate code")
         # sample-size code: 0 = from STREAMINFO, else must match it
@@ -278,22 +256,22 @@ def decode_flac(payload: bytes):
             raise NotImplementedError(
                 f"frame sample-size code {ss_code} != STREAMINFO {bps}-bit"
             )
-        crc_end = bits.bytepos()
+        crc_end = rd.bytepos()
         if _crc8(payload[pos : crc_end + 1]) != 0:
             # crc byte itself: crc8(header || crc) == 0 iff crc matches
             raise ValueError("frame header CRC-8 mismatch")
-        bits.read(8)  # the CRC-8 byte
+        rd.bits(8)  # the CRC-8 byte
         if ch_code < 8:
             if ch_code + 1 != nch:
                 raise ValueError("frame channel count != STREAMINFO")
-            sub = [_decode_subframe(bits, n, bps) for _ in range(nch)]
+            sub = [_decode_subframe(rd, n, bps) for _ in range(nch)]
         elif ch_code in (8, 9, 10):
             if nch != 2:
                 raise ValueError("stereo decorrelation in non-stereo stream")
             b0 = bps + (1 if ch_code == 9 else 0)
             b1 = bps + (1 if ch_code in (8, 10) else 0)
-            c0 = _decode_subframe(bits, n, b0)
-            c1 = _decode_subframe(bits, n, b1)
+            c0 = _decode_subframe(rd, n, b0)
+            c1 = _decode_subframe(rd, n, b1)
             if ch_code == 8:  # left/side: right = left - side
                 sub = [c0, c0 - c1]
             elif ch_code == 9:  # right/side: ch0 = SIDE, ch1 = right
@@ -304,8 +282,8 @@ def decode_flac(payload: bytes):
                 sub = [(mid + side) >> 1, (mid - side) >> 1]
         else:
             raise ValueError(f"reserved channel assignment {ch_code}")
-        bits.align()
-        fend = bits.bytepos()
+        rd.align()
+        fend = rd.bytepos()
         if _crc16(payload[pos : fend + 2]) != 0:
             raise ValueError("frame CRC-16 mismatch")
         pos = fend + 2
@@ -321,28 +299,11 @@ def decode_flac(payload: bytes):
 # ------------------------------------------------------- fixture encoder
 
 
-class _BitW:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, v: int, k: int) -> None:
-        self.acc = (self.acc << k) | (v & ((1 << k) - 1))
-        self.n += k
-        while self.n >= 8:
-            self.n -= 8
-            self.out.append((self.acc >> self.n) & 0xFF)
-
-    def unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self.n:
-            self.write(0, 8 - self.n)
+def _write_unary(bw: MsbWriter, q: int) -> None:
+    while q >= 32:
+        bw.write(0, 32)
+        q -= 32
+    bw.write(1, q + 1)
 
 
 def _utf8_number(v: int) -> bytes:
@@ -361,7 +322,7 @@ def _utf8_number(v: int) -> bytes:
     return bytes(seq)
 
 
-def _write_residual(bw: _BitW, res: list) -> None:
+def _write_residual(bw: MsbWriter, res: list) -> None:
     """Rice method 0, partition order 0. Param chosen from the mean
     magnitude; falls back to the ESCAPE raw encoding when residuals are
     too hot for Rice (param would exceed 14) — so both decode paths run
@@ -385,11 +346,11 @@ def _write_residual(bw: _BitW, res: list) -> None:
     bw.write(param, 4)
     for r in res:
         u = (-2 * r - 1) if r < 0 else 2 * r  # zigzag
-        bw.unary(u >> param)
+        _write_unary(bw, u >> param)
         bw.write(u & ((1 << param) - 1), param)
 
 
-def _write_subframe(bw: _BitW, x: np.ndarray, bps: int, order: int = 2) -> None:
+def _write_subframe(bw: MsbWriter, x: np.ndarray, bps: int, order: int = 2) -> None:
     vals = x.tolist()
     bw.write(0, 1)
     if len(set(vals)) == 1:  # CONSTANT
@@ -447,7 +408,7 @@ def make_flac(
     bps = bits
 
     out = bytearray(b"fLaC")
-    si = _BitW()
+    si = MsbWriter()
     # min == max signals fixed blocking per the spec
     si.write(max(block_size // 2, 1) if variable_block else block_size, 16)
     si.write(block_size, 16)
@@ -457,7 +418,7 @@ def make_flac(
     si.write(n_channels - 1, 3)
     si.write(bps - 1, 5)
     si.write(total, 36)
-    body = bytes(si.out) + b"\x00" * 16  # md5 unset
+    body = si.getvalue() + b"\x00" * 16  # md5 unset
     out += bytes([0x80]) + len(body).to_bytes(3, "big") + body  # last block
 
     chunks = []
@@ -472,7 +433,7 @@ def make_flac(
         chunks = []
     for frame_idx, (fi, n) in enumerate(chunks):
         blk = frames[fi : fi + n]
-        hdr = _BitW()
+        hdr = MsbWriter()
         hdr.write(0b11111111111110, 14)
         hdr.write(0, 1)
         hdr.write(1 if variable_block else 0, 1)
@@ -489,11 +450,11 @@ def make_flac(
         hdr.write({8: 0b001, 16: 0b100, 24: 0b110}[bps], 3)
         hdr.write(0, 1)
         coded = fi if variable_block else frame_idx
-        hdr_bytes = bytes(hdr.out) + _utf8_number(coded)
+        hdr_bytes = hdr.getvalue() + _utf8_number(coded)
         hdr_bytes += struct.pack(">H", n - 1)
         hdr_bytes += bytes([_crc8(hdr_bytes)])
 
-        bw = _BitW()
+        bw = MsbWriter()
         if n_channels == 2 and stereo_mode == "left_side":
             left, right = blk[:, 0], blk[:, 1]
             _write_subframe(bw, left, bps)
@@ -511,8 +472,7 @@ def make_flac(
         else:
             for c in range(n_channels):
                 _write_subframe(bw, blk[:, c], bps)
-        bw.align()
-        frame = hdr_bytes + bytes(bw.out)
+        frame = hdr_bytes + bw.getvalue()
         frame += struct.pack(">H", _crc16(frame))
         out += frame
     return bytes(out)

@@ -25,6 +25,10 @@ mm_image_decode_jpeg workload oracle reproduce decoded pixels from
 text bytes in SQL (the lossy general path cannot be oracled that way;
 it is pinned in pytest against an independently-written IDCT).
 
+Bit order: entropy-coded data is MSB-first. The scan reader and writer
+are operators/bitio.py's MsbReader/MsbWriter; JPEG adds only 0xFF00
+byte stuffing, stop-at-marker, 1-bit padding and the restart check.
+
 Performance note: the entropy scan is a Python bit reader with a
 16-bit-peek Huffman lookup table (O(1) per symbol, the standard libjpeg
 technique); all per-block numeric work runs in NumPy once per component
@@ -43,6 +47,8 @@ import functools
 import struct
 
 import numpy as np
+
+from geo_db_spark.operators.bitio import MsbReader, MsbWriter
 
 # zigzag index -> (row, col): diagonals alternate direction (T.81 Fig. 5)
 _ZIGZAG = sorted(
@@ -65,67 +71,41 @@ _IDCT_M = np.array(
 )
 
 
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    de-stuffing and restart-marker awareness."""
+class _ScanReader(MsbReader):
+    """MsbReader over entropy-coded data: 0xFF00 de-stuffing, and any
+    marker (RST or otherwise) ends the data."""
 
-    def __init__(self, buf: bytes, pos: int):
-        self.buf = buf
-        self.pos = pos
-        self.acc = 0
-        self.n = 0
-        self.n_phantom = 0  # virtual 1-bits appended past stream end
+    __slots__ = ()
 
-    def _fill(self) -> bool:
-        """Pull one more byte into the accumulator. Returns False (and
-        appends a PHANTOM all-ones byte instead) when the next byte is a
-        marker or the end of the stream — lookahead for the 16-bit
-        Huffman LUT may peek past the last real bit, but consuming a
-        phantom bit for an actual symbol/value is an error (checked in
-        _consume)."""
+    def _fill(self) -> None:
+        """Pull one more byte into the accumulator, or a PHANTOM 0xFF
+        when the next byte is a marker or the end of the stream — the
+        16-bit Huffman look-ahead may peek past the last real bit, but
+        consuming a phantom bit raises (MsbReader._consume)."""
         if self.pos + 1 < len(self.buf):
             b = self.buf[self.pos]
             if b == 0xFF:
-                nxt = self.buf[self.pos + 1]
-                if nxt == 0x00:
+                if self.buf[self.pos + 1] == 0x00:
                     self.pos += 2  # stuffed 0xFF data byte
                     self.acc = (self.acc << 8) | b
                     self.n += 8
-                    return True
+                    return
                 # marker (RST or otherwise): do not consume
             else:
                 self.pos += 1
                 self.acc = (self.acc << 8) | b
                 self.n += 8
-                return True
+                return
         self.acc = (self.acc << 8) | 0xFF
         self.n += 8
         self.n_phantom += 8
-        return False
-
-    def _consume(self, k: int) -> int:
-        if self.n - k < self.n_phantom:
-            raise ValueError("ran past end of entropy-coded data")
-        self.n -= k
-        out = (self.acc >> self.n) & ((1 << k) - 1)
-        # truncate the consumed high bits: without this the accumulator
-        # grows ~8 bits per entropy byte and the big-int shifts make a
-        # long no-restart scan O(N^2)
-        self.acc &= (1 << self.n) - 1
-        return out
-
-    def bits(self, k: int) -> int:
-        while self.n < k:
-            self._fill()
-        return self._consume(k)
 
     def huff(self, lut) -> int:
         """One Huffman symbol via the 16-bit lookup table (peek 16,
         consume the code's true length)."""
         while self.n < 16:
             self._fill()
-        idx = (self.acc >> (self.n - 16)) & 0xFFFF
-        sym_len = lut[idx]
+        sym_len = lut[(self.acc >> (self.n - 16)) & 0xFFFF]
         if sym_len < 0:
             raise ValueError("invalid Huffman code")
         self._consume(sym_len & 31)
@@ -135,9 +115,7 @@ class _BitReader:
         self.acc = 0
         self.n = 0
         self.n_phantom = 0
-        if not (
-            self.buf[self.pos] == 0xFF and self.buf[self.pos + 1] == 0xD0 + (n & 7)
-        ):
+        if self.buf[self.pos : self.pos + 2] != bytes([0xFF, 0xD0 + (n & 7)]):
             raise ValueError(
                 f"expected RST{n & 7} at offset {self.pos}, found "
                 f"{self.buf[self.pos:self.pos + 2].hex()}"
@@ -196,6 +174,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
             continue  # parameterless
         ln = struct.unpack_from(">H", payload, pos)[0]
+        if ln < 2 or pos + ln > len(payload):
+            raise ValueError(f"JPEG segment 0xFF{marker:02X} runs past the payload")
         seg = payload[pos + 2 : pos + ln]
         if marker == 0xDB:  # DQT
             i = 0
@@ -322,7 +302,7 @@ def _prog_scan(buf, pos, frame, scan, scan_order, ss, se, ah, al,
     bw_ = -(-frame["w"] // 8)
     bh_ = -(-frame["h"] // 8)
     nblocks = bw_ * bh_
-    rd = _BitReader(buf, pos)
+    rd = _ScanReader(buf, pos)
     if ss == 0:  # DC scan: interleaved over the scan's components
         if se != 0:
             raise ValueError("DC scan with Se != 0")
@@ -470,7 +450,7 @@ def _decode_scan(buf, pos, frame, scan, qt, huff_dc, huff_ac, restart_interval):
             raise ValueError(f"component {c['id']} missing from scan")
         if c["tq"] not in qt:
             raise ValueError(f"quant table {c['tq']} undefined")
-    rd = _BitReader(buf, pos)
+    rd = _ScanReader(buf, pos)
     pred = [0] * len(comps)
     mcu_count = 0
     rst_n = 0
@@ -580,21 +560,14 @@ def _enc_codes(bits: bytes, symbols: bytes) -> dict:
     return out
 
 
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
+class _ScanWriter(MsbWriter):
+    """MsbWriter that byte-stuffs every emitted 0xFF as 0xFF00 and pads
+    with 1-bits (T.81 F.1.2.3 / B.1.1.5)."""
 
-    def write(self, value: int, k: int) -> None:
-        self.acc = (self.acc << k) | (value & ((1 << k) - 1))
-        self.n += k
-        while self.n >= 8:
-            self.n -= 8
-            b = (self.acc >> self.n) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)  # byte stuffing
+    __slots__ = ()
+
+    def _emit(self, chunk: bytes) -> None:
+        self.out += chunk.replace(b"\xff", b"\xff\x00")
 
     def pad(self) -> None:
         if self.n:
@@ -678,7 +651,7 @@ def make_jpeg_gray_from_blocks(
     ac_code = _enc_codes(_ENC_AC_BITS, _AC_SYMBOLS)
     blocks = np.asarray(blocks_zz, np.int64)[: blocks_y * blocks_x]
     zz, last = blocks.tolist(), _last_nonzero(blocks)
-    bw = _BitWriter()
+    bw = _ScanWriter()
     pred = 0
     rst_n = 0
     for i in range(blocks_y * blocks_x):
@@ -772,7 +745,7 @@ def make_jpeg(
     zz = [(z.tolist(), _last_nonzero(z)) for z in zz]
     dc_code = _enc_codes(_ENC_DC_BITS, _ENC_DC_SYMS)
     ac_code = _enc_codes(_ENC_AC_BITS, _AC_SYMBOLS)
-    bw = _BitWriter()
+    bw = _ScanWriter()
     preds = [0, 0, 0]
     mcux = yp.shape[1] // mcu
     mcuy = yp.shape[0] // mcu
@@ -820,7 +793,7 @@ _PROG_SCRIPT = (
 )
 
 
-def _emit_eobn(bw: _BitWriter, ac_code: dict, eobrun: int) -> int:
+def _emit_eobn(bw: _ScanWriter, ac_code: dict, eobrun: int) -> int:
     """Flush an accumulated EOB run as one EOBn symbol (r = floor(log2),
     r extension bits). Returns 0."""
     if eobrun <= 0:
@@ -873,7 +846,7 @@ def make_jpeg_gray_progressive_from_blocks(
 
     for ss, se, ah, al in script:
         out += _seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-        bw = _BitWriter()
+        bw = _ScanWriter()
         rst_n = 0
 
         def _rst(bw):

@@ -4,7 +4,8 @@ typed metadata, processed by Arrow-batched Pandas iterators (mapInPandas).
 The Spark-side plumbing — schema, partitioning, UDF signatures, batch
 shapes — is real and tested, and so is the decode layer: pure
 stdlib+NumPy decoders for PPM (8/16-bit), BMP (8-bit palette, 24/32-bit,
-BI_RLE8), PNG (8/16-bit, palette, Adam7), GIF (LZW, interlaced), JPEG
+BI_RLE8), PNG (8/16-bit, palette, Adam7), GIF (LZW with LSB-first codes
+through operators/bitio.py, interlaced), JPEG
 (baseline + progressive, operators/jpeg.py), WAV PCM (8/16/24/32-bit)
 and FLAC (operators/flac.py). Only perceptual codecs that genuinely
 need a native library remain NotImplementedError boundaries (WebP,
@@ -25,6 +26,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from geo_db_spark.operators.bitio import LsbReader, LsbWriter
 
 MEDIA_META = T.StructType(
     [
@@ -884,21 +887,14 @@ def _lzw_decode(data: bytes, min_code_size: int, expected: int) -> bytearray:
     clear = 1 << min_code_size
     end = clear + 1
     out = bytearray()
-    bitpos = 0
-    nbits = len(data) * 8
+    rd = LsbReader(data)
 
     code_size = min_code_size + 1
     table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
     prev: bytes | None = None
 
     while len(out) < expected:
-        if bitpos + code_size > nbits:
-            raise ValueError("LZW stream truncated")
-        code = 0
-        for i in range(code_size):
-            if (data[(bitpos + i) >> 3] >> ((bitpos + i) & 7)) & 1:
-                code |= 1 << i
-        bitpos += code_size
+        code = rd.bits(code_size)
         if code == clear:
             table = [bytes([i]) for i in range(clear)] + [b"", b""]
             code_size = min_code_size + 1
@@ -949,6 +945,24 @@ def _decode_gif(payload: bytes):
 
     if payload[:6] not in GIF_MAGICS:
         raise ValueError("not a GIF payload")
+
+    def need(end: int) -> None:
+        if end > len(payload):
+            raise ValueError(f"GIF block runs past the payload at byte {end}")
+
+    def sub_blocks(pos: int) -> tuple[bytes, int]:
+        """Concatenated data sub-blocks at ``pos`` and the offset past
+        their zero terminator."""
+        data = bytearray()
+        need(pos + 1)
+        while payload[pos] != 0:
+            ln = payload[pos]
+            need(pos + 2 + ln)
+            data += payload[pos + 1 : pos + 1 + ln]
+            pos += 1 + ln
+        return bytes(data), pos + 1
+
+    need(13)
     _w, _h, packed, _bg, _ar = struct.unpack_from("<HHBBB", payload, 6)
     pos = 13
     gct = None
@@ -961,11 +975,9 @@ def _decode_gif(payload: bytes):
         if block == 0x3B:  # trailer
             break
         if block == 0x21:  # extension: label byte + sub-blocks
-            pos += 2
-            while payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
+            _, pos = sub_blocks(pos + 2)
         elif block == 0x2C:  # image descriptor
+            need(pos + 10)
             _l, _t, iw, ih, ipacked = struct.unpack_from("<HHHHB", payload, pos + 1)
             pos += 10
             interlaced = bool(ipacked & 0x40)
@@ -976,15 +988,10 @@ def _decode_gif(payload: bytes):
                 pos += 3 * n
             if ct is None:
                 raise ValueError("GIF image with no color table")
+            need(pos + 1)
             min_code_size = payload[pos]
-            pos += 1
-            data = bytearray()
-            while payload[pos] != 0:
-                ln = payload[pos]
-                data += payload[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            idx = _lzw_decode(bytes(data), min_code_size, iw * ih)
+            data, pos = sub_blocks(pos + 1)
+            idx = _lzw_decode(data, min_code_size, iw * ih)
             rows = np.frombuffer(bytes(idx), np.uint8).reshape(ih, iw)
             if interlaced:
                 # stream row i belongs at image row order[i]
@@ -1027,43 +1034,32 @@ def make_gif(
     mcs = 8  # 256-entry palette -> 8-bit min code size
     clear, end = 1 << mcs, (1 << mcs) + 1
 
-    codes: list[tuple[int, int]] = []  # (code, width-at-emit)
+    bw = LsbWriter()
     table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
     next_code = end + 1
     code_size = mcs + 1
-    codes.append((clear, code_size))
+    bw.write(clear, code_size)
     s = b""
     for ch in index_bytes:
         s2 = s + bytes([ch])
         if s2 in table:
             s = s2
             continue
-        codes.append((table[s], code_size))
+        bw.write(table[s], code_size)
         table[s2] = next_code
         if next_code == (1 << code_size) and code_size < 12:
             code_size += 1
         next_code += 1
         if next_code == 4096:  # table full: reset (decoder mirrors)
-            codes.append((clear, code_size))
+            bw.write(clear, code_size)
             table = {bytes([i]): i for i in range(clear)}
             next_code = end + 1
             code_size = mcs + 1
         s = bytes([ch])
     if s:
-        codes.append((table[s], code_size))
-    codes.append((end, code_size))
-
-    bits = bytearray()
-    acc = n_acc = 0
-    for code, width_bits in codes:
-        acc |= code << n_acc
-        n_acc += width_bits
-        while n_acc >= 8:
-            bits.append(acc & 0xFF)
-            acc >>= 8
-            n_acc -= 8
-    if n_acc:
-        bits.append(acc & 0xFF)
+        bw.write(table[s], code_size)
+    bw.write(end, code_size)
+    bits = bw.getvalue()
 
     sub = bytearray()
     for i in range(0, len(bits), 255):

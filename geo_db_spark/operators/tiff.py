@@ -9,7 +9,7 @@ planes, §14's "StripsPerImage strips per component, component 0
 first" layout, tiles likewise), 8-bit samples, PhotometricInterpretation
 1 (grayscale BlackIsZero, widened to RGB), 2 (RGB) and 3 (palette via
 ColorMap), Compression 1 (none), 32773 (PackBits), 5 (TIFF-LZW —
-MSB-first codes, 256=Clear/257=EOI, the spec's EarlyChange width bump
+MSB-first codes through operators/bitio.py, 256=Clear/257=EOI, the spec's EarlyChange width bump
 one code early) and 4 (CCITT Group 4 via operators/ccitt.py),
 Predictor 2 (horizontal differencing — restarting per strip/tile row,
 which is why the undo runs per decompressed unit, not on the
@@ -26,6 +26,8 @@ reused). No reference counterpart (SURVEY §2-H engine growth).
 from __future__ import annotations
 
 import struct
+
+from geo_db_spark.operators.bitio import MsbReader, MsbWriter
 
 # FillOrder=2 (tag 266): bits within each byte are stored LSB-first —
 # the common layout in scanned-fax TIFFs. Reversing every byte turns
@@ -71,16 +73,13 @@ def _lzw_decode_tiff(data: bytes, expected: int) -> bytes:
 
     width = 9
     reset()
-    bitpos = 0
+    rd = MsbReader(data)
     prev: bytes | None = None
-    total_bits = len(data) * 8
-    while bitpos + width <= total_bits:
-        # MSB-first read
-        code = 0
-        for _ in range(width):
-            byte = data[bitpos >> 3]
-            code = (code << 1) | ((byte >> (7 - (bitpos & 7))) & 1)
-            bitpos += 1
+    while True:
+        try:
+            code = rd.bits(width)
+        except ValueError:
+            break  # soft stop at end of data: the length check below decides
         if code == 256:  # Clear
             reset()
             prev = None
@@ -124,23 +123,25 @@ def decode_tiff(payload: bytes):
         e = ">"
     else:
         raise ValueError("not a TIFF payload")
-    (ifd_off,) = struct.unpack_from(e + "I", payload, 4)
-    (n_entries,) = struct.unpack_from(e + "H", payload, ifd_off)
+
+    def unpack(fmt: str, off: int) -> tuple:
+        if off + struct.calcsize(e + fmt) > len(payload):
+            raise ValueError(f"TIFF IFD field at offset {off} runs past the payload")
+        return struct.unpack_from(e + fmt, payload, off)
+
+    (ifd_off,) = unpack("I", 4)
+    (n_entries,) = unpack("H", ifd_off)
     tags: dict[int, list[int]] = {}
     type_size = {1: 1, 3: 2, 4: 4}
     type_fmt = {1: "B", 3: "H", 4: "I"}
     for i in range(n_entries):
         off = ifd_off + 2 + 12 * i
-        tag, typ, cnt = struct.unpack_from(e + "HHI", payload, off)
+        tag, typ, cnt = unpack("HHI", off)
         if typ not in type_size:
             continue  # rationals etc. (resolution tags) are irrelevant here
         total = type_size[typ] * cnt
-        if total <= 4:
-            vals = struct.unpack_from(e + type_fmt[typ] * cnt, payload, off + 8)
-        else:
-            (voff,) = struct.unpack_from(e + "I", payload, off + 8)
-            vals = struct.unpack_from(e + type_fmt[typ] * cnt, payload, voff)
-        tags[tag] = list(vals)
+        voff = off + 8 if total <= 4 else unpack("I", off + 8)[0]
+        tags[tag] = list(unpack(f"{cnt}{type_fmt[typ]}", voff))
 
     def one(tag: int, default=None):
         if tag in tags:
@@ -332,23 +333,18 @@ def _packbits(row: bytes) -> bytes:
 def _lzw_encode_tiff(data: bytes) -> bytes:
     """TIFF-LZW compressor twin (string-table LZW with Clear/EOI and
     the EarlyChange width rule, mirroring _lzw_decode_tiff)."""
-    out_bits: list[int] = []
+    bw = MsbWriter()
     width = 9
     table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
     next_code = 258
-
-    def emit(code: int):
-        for b in range(width - 1, -1, -1):
-            out_bits.append((code >> b) & 1)
-
-    emit(256)  # spec: begin with a Clear
+    bw.write(256, width)  # spec: begin with a Clear
     cur = b""
     for byte in data:
         nxt = cur + bytes([byte])
         if nxt in table:
             cur = nxt
             continue
-        emit(table[cur])
+        bw.write(table[cur], width)
         table[nxt] = next_code
         next_code += 1
         # EarlyChange: the ENCODER widens as soon as next_code would
@@ -356,21 +352,15 @@ def _lzw_encode_tiff(data: bytes) -> bytes:
         if next_code == (1 << width) - 1 and width < 12:
             width += 1
         if next_code == 4094:  # table nearly full: clear (spec practice)
-            emit(256)
+            bw.write(256, width)
             table = {bytes([i]): i for i in range(256)}
             next_code = 258
             width = 9
         cur = bytes([byte])
     if cur:
-        emit(table[cur])
-    emit(257)  # EOI
-    out = bytearray()
-    for i in range(0, len(out_bits), 8):
-        byte = 0
-        for j, bit in enumerate(out_bits[i : i + 8]):
-            byte |= bit << (7 - j)
-        out.append(byte)
-    return bytes(out)
+        bw.write(table[cur], width)
+    bw.write(257, width)  # EOI
+    return bw.getvalue()
 
 
 def make_tiff(

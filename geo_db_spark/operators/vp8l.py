@@ -21,6 +21,11 @@ docs) — the r8 verdict's "most common remaining image format". Scope:
   exercise those decoder paths. Lossless, so decode(make_webp(x)) == x
   — which is what lets the workload query carry a full value oracle.
 
+Bit order: LSB-first (operators/bitio.py's LsbReader/LsbWriter), except
+that Huffman codes are stored most-significant code bit first: the
+decoder walks them one bit at a time and ``_write_code`` bit-reverses
+each code into one LSB-first write.
+
 Honest boundaries (NotImplementedError): lossy VP8, and VP8X extended
 containers whose image payload is lossy; a VP8X wrapping a VP8L chunk
 decodes fine. No reference counterpart (SURVEY §2-H engine growth).
@@ -29,6 +34,8 @@ decodes fine. No reference counterpart (SURVEY §2-H engine growth).
 from __future__ import annotations
 
 import struct
+
+from geo_db_spark.operators.bitio import LsbReader, LsbWriter
 
 # code-length-code transmission order (spec §"Decoding the Code Lengths")
 K_CODE_LENGTH_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
@@ -54,54 +61,15 @@ K_DISTANCE_MAP = [
 ]
 
 
-class _BitReader:
-    """LSB-first bit reader (VP8L bit order)."""
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.byte = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            if self.byte >= len(self.buf):
-                raise ValueError("VP8L: ran past end of stream")
-            v |= ((self.buf[self.byte] >> self.bit) & 1) << i
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.byte += 1
-        return v
-
-
-class _BitWriter:
-    """LSB-first bit writer (encoder twin)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc |= (v & ((1 << n) - 1)) << self.n
-        self.n += n
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        """Huffman codes are walked MSB-first by the decoder, so emit
-        the code's bits high-to-low."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def bytes(self) -> bytes:
-        out = bytearray(self.out)
-        if self.n:
-            out.append(self.acc & 0xFF)
-        return bytes(out)
+def _write_code(bw: LsbWriter, code: int, length: int) -> None:
+    """Huffman codes are walked MSB-first by the decoder (_Huffman.read),
+    so the code goes out high bit first: bit-reverse it into one
+    LSB-first write."""
+    rev = 0
+    for _ in range(length):
+        rev = (rev << 1) | (code & 1)
+        code >>= 1
+    bw.write(rev, length)
 
 
 class _Huffman:
@@ -132,13 +100,13 @@ class _Huffman:
             self.table[(ln, code)] = sym
             code += 1
 
-    def read(self, br: _BitReader) -> int:
+    def read(self, br: LsbReader) -> int:
         if self.single is not None:
             return self.single
         code = 0
         ln = 0
         while True:
-            code = (code << 1) | br.read(1)
+            code = (code << 1) | br.bits(1)
             ln += 1
             sym = self.table.get((ln, code))
             if sym is not None:
@@ -147,39 +115,39 @@ class _Huffman:
                 raise ValueError("VP8L: invalid Huffman code in stream")
 
 
-def _read_huffman_code(br: _BitReader, alphabet_size: int) -> _Huffman:
+def _read_huffman_code(br: LsbReader, alphabet_size: int) -> _Huffman:
     """Spec §"Decoding of Huffman Codes": simple (<=2 symbols) or
     normal (code-length-coded) form."""
-    if br.read(1):  # simple
-        num_symbols = br.read(1) + 1
-        first_8 = br.read(1)
+    if br.bits(1):  # simple
+        num_symbols = br.bits(1) + 1
+        first_8 = br.bits(1)
         lengths = [0] * alphabet_size
-        s0 = br.read(8 if first_8 else 1)
+        s0 = br.bits(8 if first_8 else 1)
         if s0 >= alphabet_size:
             raise ValueError("VP8L: simple-code symbol out of range")
         if num_symbols == 1:
             lengths[s0] = 1  # placeholder; single-symbol reads 0 bits
             return _Huffman(lengths)
-        s1 = br.read(8)
+        s1 = br.bits(8)
         if s1 >= alphabet_size or s1 == s0:
             raise ValueError("VP8L: bad simple-code symbols")
         lengths[s0] = 1
         lengths[s1] = 1
         return _Huffman(lengths)
     # normal: first the code-length code
-    num_codes = br.read(4) + 4
+    num_codes = br.bits(4) + 4
     if num_codes > len(K_CODE_LENGTH_ORDER):
         raise ValueError("VP8L: too many code length codes")
     cl_lengths = [0] * 19
     for i in range(num_codes):
-        cl_lengths[K_CODE_LENGTH_ORDER[i]] = br.read(3)
+        cl_lengths[K_CODE_LENGTH_ORDER[i]] = br.bits(3)
     cl_huff = _Huffman(cl_lengths) if sum(cl_lengths) else None
     if cl_huff is None:
         raise ValueError("VP8L: empty code-length code")
     # optional transmitted-symbol cap
-    if br.read(1):
-        length_nbits = 2 + 2 * br.read(3)
-        max_symbol = 2 + br.read(length_nbits)
+    if br.bits(1):
+        length_nbits = 2 + 2 * br.bits(3)
+        max_symbol = 2 + br.bits(length_nbits)
     else:
         max_symbol = alphabet_size
     lengths = [0] * alphabet_size
@@ -194,29 +162,29 @@ def _read_huffman_code(br: _BitReader, alphabet_size: int) -> _Huffman:
             if sym:
                 prev_len = sym
         elif sym == 16:
-            rep = 3 + br.read(2)
+            rep = 3 + br.bits(2)
             for _ in range(rep):
                 if i >= alphabet_size:
                     raise ValueError("VP8L: code-length repeat overrun")
                 lengths[i] = prev_len
                 i += 1
         elif sym == 17:
-            i += 3 + br.read(3)
+            i += 3 + br.bits(3)
         else:  # 18
-            i += 11 + br.read(7)
+            i += 11 + br.bits(7)
         if i > alphabet_size:
             raise ValueError("VP8L: code-length zeros overrun")
     return _Huffman(lengths)
 
 
-def _prefix_value(code: int, br: _BitReader) -> int:
+def _prefix_value(code: int, br: LsbReader) -> int:
     """LZ77 length/distance prefix coding (spec §"Decoding of
     Distances"): codes 0-3 are 1-4; beyond that, extra bits."""
     if code < 4:
         return code + 1
     extra = (code - 2) >> 1
     offset = (2 + (code & 1)) << extra
-    return offset + br.read(extra) + 1
+    return offset + br.bits(extra) + 1
 
 
 def _cache_key(argb: int, bits: int) -> int:
@@ -224,7 +192,7 @@ def _cache_key(argb: int, bits: int) -> int:
 
 
 def _decode_entropy_image(
-    br: _BitReader, w: int, h: int, level0: bool = False
+    br: LsbReader, w: int, h: int, level0: bool = False
 ) -> "object":
     """Decode one spatially-coded image (the main image when level0,
     otherwise transform/meta sub-images, which have no transforms of
@@ -232,8 +200,8 @@ def _decode_entropy_image(
     import numpy as np
 
     cache_bits = 0
-    if br.read(1):
-        cache_bits = br.read(4)
+    if br.bits(1):
+        cache_bits = br.bits(4)
         if not (1 <= cache_bits <= 11):
             raise ValueError(f"VP8L: bad color-cache bits {cache_bits}")
     cache_size = (1 << cache_bits) if cache_bits else 0
@@ -242,8 +210,8 @@ def _decode_entropy_image(
     meta = None
     meta_bits = 0
     num_groups = 1
-    if level0 and br.read(1):
-        meta_bits = br.read(3) + 2
+    if level0 and br.bits(1):
+        meta_bits = br.bits(3) + 2
         mw = (w + (1 << meta_bits) - 1) >> meta_bits
         mh = (h + (1 << meta_bits) - 1) >> meta_bits
         meta_img = _decode_entropy_image(br, mw, mh)
@@ -468,30 +436,30 @@ def decode_vp8l(payload: bytes):
         raise ValueError("WebP: no VP8L chunk found")
     if not data or data[0] != 0x2F:
         raise ValueError("VP8L: bad signature byte")
-    br = _BitReader(data, 1)
-    w = br.read(14) + 1
-    h = br.read(14) + 1
-    br.read(1)  # alpha hint
-    if br.read(3) != 0:
+    br = LsbReader(data, 1)
+    w = br.bits(14) + 1
+    h = br.bits(14) + 1
+    br.bits(1)  # alpha hint
+    if br.bits(3) != 0:
         raise ValueError("VP8L: unsupported version")
 
     # transforms (top-level image only), remembered in read order
     transforms = []
     seen = set()
     main_w = w
-    while br.read(1):
-        ttype = br.read(2)
+    while br.bits(1):
+        ttype = br.bits(2)
         if ttype in seen:
             raise ValueError("VP8L: duplicate transform")
         seen.add(ttype)
         if ttype == 0:  # predictor
-            bits = br.read(3) + 2
+            bits = br.bits(3) + 2
             modes = _decode_entropy_image(
                 br, _sub_image_dims(main_w, bits), _sub_image_dims(h, bits)
             )
             transforms.append(("predictor", bits, modes))
         elif ttype == 1:  # color transform
-            bits = br.read(3) + 2
+            bits = br.bits(3) + 2
             elems = _decode_entropy_image(
                 br, _sub_image_dims(main_w, bits), _sub_image_dims(h, bits)
             )
@@ -499,7 +467,7 @@ def decode_vp8l(payload: bytes):
         elif ttype == 2:  # subtract green
             transforms.append(("subtract_green",))
         else:  # color indexing
-            n_colors = br.read(8) + 1
+            n_colors = br.bits(8) + 1
             pal_img = _decode_entropy_image(br, n_colors, 1)
             # palette entries are component-wise delta-coded
             pal = np.zeros(n_colors, dtype=np.uint32)
@@ -599,7 +567,7 @@ def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
     return out
 
 
-def _transmit_code(bw: _BitWriter, lengths: list[int], alphabet_size: int) -> None:
+def _transmit_code(bw: LsbWriter, lengths: list[int], alphabet_size: int) -> None:
     """Write one 'normal'-form Huffman code: code-length code, exact
     max-symbol cap, then the code-length symbol stream (literals,
     16-repeats for runs of the same nonzero length, 17/18 zero runs)."""
@@ -661,12 +629,12 @@ def _transmit_code(bw: _BitWriter, lengths: list[int], alphabet_size: int) -> No
     bw.write(cap, 2 + 2 * nbits_k)
     for sym, extra_v, extra_b in stream:
         code, ln = cl_codes[sym]
-        bw.write_code(code, ln)
+        _write_code(bw, code, ln)
         if extra_b:
             bw.write(extra_v, extra_b)
 
 
-def _write_huffman(bw: _BitWriter, used: list[int], alphabet_size: int):
+def _write_huffman(bw: LsbWriter, used: list[int], alphabet_size: int):
     """Write the cheapest legal code for the used symbol set and return
     symbol -> (code, length). <=2 symbols use the simple form."""
     used = sorted(set(used))
@@ -701,7 +669,7 @@ def _prefix_encode(value: int) -> tuple[int, int, int]:
 
 
 def _write_entropy_image(
-    bw: _BitWriter,
+    bw: LsbWriter,
     px: list[int],
     w: int,
     level0: bool,
@@ -754,10 +722,10 @@ def _write_entropy_image(
             )
         for i, v in enumerate(px):
             gc, rc, bc, ac, _dc = codes[group_of_pixel(i)]
-            bw.write_code(*gc[(v >> 8) & 0xFF])
-            bw.write_code(*rc[(v >> 16) & 0xFF])
-            bw.write_code(*bc[v & 0xFF])
-            bw.write_code(*ac[(v >> 24) & 0xFF])
+            _write_code(bw, *gc[(v >> 8) & 0xFF])
+            _write_code(bw, *rc[(v >> 16) & 0xFF])
+            _write_code(bw, *bc[v & 0xFF])
+            _write_code(bw, *ac[(v >> 24) & 0xFF])
         return
 
     bw.write(1 if cache_bits else 0, 1)
@@ -816,21 +784,21 @@ def _write_entropy_image(
     for t in tokens:
         if t[0] == "lit":
             argb = t[1]
-            bw.write_code(*g_code[(argb >> 8) & 0xFF])
-            bw.write_code(*r_code[(argb >> 16) & 0xFF])
-            bw.write_code(*b_code[argb & 0xFF])
-            bw.write_code(*a_code[(argb >> 24) & 0xFF])
+            _write_code(bw, *g_code[(argb >> 8) & 0xFF])
+            _write_code(bw, *r_code[(argb >> 16) & 0xFF])
+            _write_code(bw, *b_code[argb & 0xFF])
+            _write_code(bw, *a_code[(argb >> 24) & 0xFF])
         elif t[0] == "run":
             pc, ev, eb = _prefix_encode(t[1])
-            bw.write_code(*g_code[256 + pc])
+            _write_code(bw, *g_code[256 + pc])
             if eb:
                 bw.write(ev, eb)
             dc, dv, db = _prefix_encode(2)
-            bw.write_code(*d_code[dc])
+            _write_code(bw, *d_code[dc])
             if db:
                 bw.write(dv, db)
         else:
-            bw.write_code(*g_code[256 + 24 + t[1]])
+            _write_code(bw, *g_code[256 + 24 + t[1]])
 
 
 def make_webp(
@@ -864,7 +832,7 @@ def make_webp(
         | rgb_bytes[i * 3 + 2]
         for i in range(width * height)
     ]
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(width - 1, 14)
     bw.write(height - 1, 14)
     bw.write(0, 1)  # alpha hint
@@ -1011,7 +979,7 @@ def make_webp(
     _write_entropy_image(
         bw, px, main_w, level0=True, use_lz77=use_lz77, cache_bits=cache_bits
     )
-    data = b"\x2f" + bw.bytes()
+    data = b"\x2f" + bw.getvalue()
     chunk = b"VP8L" + struct.pack("<I", len(data)) + data
     if len(data) & 1:
         chunk += b"\x00"

@@ -11,8 +11,8 @@ import struct
 import numpy as np
 import pytest
 
+from geo_db_spark.operators.bitio import MsbWriter
 from geo_db_spark.operators.flac import (
-    _BitW,
     _crc8,
     _crc16,
     _utf8_number,
@@ -82,7 +82,7 @@ def _hand_frame(n, rate, subframe_writer, total=None):
     """Build a single-frame mono 16-bit FLAC whose subframe bits come
     from ``subframe_writer(bw)`` — exercises decoder paths the fixture
     encoder never emits."""
-    si = _BitW()
+    si = MsbWriter()
     si.write(n, 16)
     si.write(n, 16)
     si.write(0, 24)
@@ -94,7 +94,7 @@ def _hand_frame(n, rate, subframe_writer, total=None):
     body = bytes(si.out) + b"\x00" * 16
     out = bytearray(b"fLaC") + bytes([0x80]) + len(body).to_bytes(3, "big") + body
 
-    hdr = _BitW()
+    hdr = MsbWriter()
     hdr.write(0b11111111111110, 14)
     hdr.write(0, 2)
     hdr.write(7, 4)   # 16-bit blocksize at end
@@ -104,7 +104,7 @@ def _hand_frame(n, rate, subframe_writer, total=None):
     hdr.write(0, 1)
     hb = bytes(hdr.out) + _utf8_number(0) + struct.pack(">H", n - 1)
     hb += bytes([_crc8(hb)])
-    bw = _BitW()
+    bw = MsbWriter()
     subframe_writer(bw)
     bw.align()
     frame = hb + bytes(bw.out)
@@ -220,7 +220,7 @@ def test_flac_refusals_and_dispatcher():
     out, rate = decode_audio(good)  # dispatches on fLaC magic
     assert rate == 8000 and out[:, 0].tolist() == list(range(16))
     # 20-bit STREAMINFO refuses (8/16/24 are supported since r9)
-    si = _BitW()
+    si = MsbWriter()
     si.write(16, 16); si.write(16, 16); si.write(0, 24); si.write(0, 24)
     si.write(8000, 20); si.write(0, 3); si.write(19, 5)  # 20-bit
     si.write(0, 36)
@@ -231,7 +231,7 @@ def test_flac_refusals_and_dispatcher():
     # total_samples=0 is legal FLAC for "unknown length"; the
     # sample-count-driven frame loop would silently decode ZERO samples
     # — must refuse loudly instead (r8 ADVICE #4)
-    si0 = _BitW()
+    si0 = MsbWriter()
     si0.write(16, 16); si0.write(16, 16); si0.write(0, 24); si0.write(0, 24)
     si0.write(8000, 20); si0.write(0, 3); si0.write(15, 5)  # 16-bit
     si0.write(0, 36)  # unknown total
@@ -289,7 +289,7 @@ def test_flac_8_and_24_bit_roundtrip():
 
 
 def test_flac_12_bit_still_refuses():
-    si = _BitW()
+    si = MsbWriter()
     si.write(16, 16); si.write(16, 16); si.write(0, 24); si.write(0, 24)
     si.write(8000, 20); si.write(0, 3); si.write(11, 5)  # 12-bit
     si.write(0, 36)

@@ -161,7 +161,7 @@ def test_jpeg_refusals():
     # not a JPEG / truncated garbage after SOI
     with pytest.raises(ValueError):
         decode_jpeg(b"\x00\x01")
-    with pytest.raises((ValueError, IndexError, NotImplementedError)):
+    with pytest.raises((ValueError, NotImplementedError)):
         decode_jpeg(b"\xff\xd8\xff\xe0 jpeg")
     # scanless stream
     with pytest.raises(ValueError, match="no scan"):

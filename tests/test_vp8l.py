@@ -280,7 +280,7 @@ def test_roundtrip_hypothesis_fuzz():
 
 
 class _SpecBits:
-    """LSB-first bit packer, independent of the module's _BitWriter."""
+    """LSB-first bit packer, independent of bitio.LsbWriter."""
 
     def __init__(self):
         self.bits: list[int] = []
