@@ -1,32 +1,24 @@
-"""Bit-level reading and writing shared by the in-repo codecs.
+"""Bit-level I/O shared by the in-repo codecs.
 
-Two bit orders cover every format here:
+MSB-first (``MsbReader``/``MsbWriter``): JPEG entropy data, FLAC, CCITT
+fax and TIFF-LZW. LSB-first (``LsbReader``/``LsbWriter``): VP8L and
+GIF-LZW; they reuse the MSB classes and override only the bit-order
+steps.
 
-- MSB-first (``MsbReader`` / ``MsbWriter``): JPEG entropy data, FLAC,
-  CCITT G3/G4/MH fax and TIFF-LZW. A value's high bit comes first, and
-  each byte is filled from its high bit down.
-- LSB-first (``LsbReader`` / ``LsbWriter``): WebP-lossless (VP8L) and
-  GIF-LZW. A value's low bit comes first, and each byte is filled from
-  its low bit up.
-
-Readers keep an integer accumulator that is filled one byte at a time
-on demand; consumed bits are masked off, so the accumulator stays a few
-bytes wide and a long stream reads in O(N). ``peek`` may look past the
-end of the data and sees phantom 1-bits there (a 16-bit Huffman
-look-ahead near the end of a stream needs this); consuming a phantom
-bit raises ``ValueError``. Writers keep the same accumulator and move
-whole bytes to ``out`` as soon as they are complete.
-
-Format quirks ride on subclass hooks instead of flags: JPEG's 0xFF00
-byte stuffing overrides ``MsbReader._fill`` and ``MsbWriter._emit``
-(operators/jpeg.py).
+Readers fill an integer accumulator one byte at a time on demand and
+mask off consumed bits, so it stays a few bytes wide and a long stream
+reads in O(N). ``peek`` may look past the end of the data and sees
+1-bits there (a Huffman look-ahead near the end needs this); consuming
+such a phantom bit raises ValueError. Writers move each finished byte
+to ``out`` at once. JPEG's 0xFF00 stuffing overrides ``_fill`` and
+``_emit`` (operators/jpeg.py).
 """
 
 from __future__ import annotations
 
 
 class MsbReader:
-    """MSB-first bit reader over ``buf`` starting at byte ``pos``."""
+    """MSB-first bit reader over ``buf`` from byte ``pos``."""
 
     __slots__ = ("buf", "pos", "acc", "n", "n_phantom")
 
@@ -34,11 +26,10 @@ class MsbReader:
         self.buf = buf
         self.pos = pos
         self.acc = 0
-        self.n = 0  # bits held in acc
-        self.n_phantom = 0  # of those, phantom 1-bits appended past the end
+        self.n = 0  # bits in acc
+        self.n_phantom = 0  # of those, 1-bits appended past the end
 
     def _fill(self) -> None:
-        """Append the next byte, or a phantom 0xFF past the end."""
         if self.pos < len(self.buf):
             self.acc = (self.acc << 8) | self.buf[self.pos]
             self.pos += 1
@@ -78,17 +69,10 @@ class MsbReader:
         return self.pos - ((self.n - self.n_phantom) >> 3)
 
 
-class LsbReader:
-    """LSB-first bit reader over ``buf`` starting at byte ``pos``."""
+class LsbReader(MsbReader):
+    """LSB-first bit reader: the next bit is the accumulator's lowest."""
 
-    __slots__ = ("buf", "pos", "acc", "n", "n_phantom")
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.pos = pos
-        self.acc = 0
-        self.n = 0
-        self.n_phantom = 0
+    __slots__ = ()
 
     def _fill(self) -> None:
         if self.pos < len(self.buf):
@@ -99,15 +83,12 @@ class LsbReader:
             self.n_phantom += 8
         self.n += 8
 
-    def bits(self, k: int) -> int:
-        while self.n < k:
-            self._fill()
-        n = self.n - k
-        if n < self.n_phantom:
+    def _consume(self, k: int) -> int:
+        if self.n - k < self.n_phantom:
             raise ValueError("bit stream truncated")
         out = self.acc & ((1 << k) - 1)
         self.acc >>= k
-        self.n = n
+        self.n -= k
         return out
 
     def peek(self, k: int) -> int:
@@ -115,34 +96,25 @@ class LsbReader:
             self._fill()
         return self.acc & ((1 << k) - 1)
 
-    def skip(self, k: int) -> None:
-        self.bits(k)
-
-    def align(self) -> None:
-        """Drop the rest of the current byte."""
-        self.bits(self.n & 7)
-
 
 class MsbWriter:
-    """MSB-first bit writer; finished bytes accumulate in ``out``."""
+    """MSB-first bit writer; finished bytes go to ``out``."""
 
     __slots__ = ("out", "acc", "n")
 
     def __init__(self):
         self.out = bytearray()
         self.acc = 0
-        self.n = 0  # pending bits in acc, always < 8 between writes
+        self.n = 0  # pending bits, fewer than 8 between writes
 
     def write(self, value: int, k: int) -> None:
         acc = (self.acc << k) | (value & ((1 << k) - 1))
         n = self.n + k
         if n >= 8:
-            r = n & 7
-            self._emit((acc >> r).to_bytes(n >> 3, "big"))
-            acc &= (1 << r) - 1
-            n = r
-        self.acc = acc
-        self.n = n
+            self._emit((acc >> (n & 7)).to_bytes(n >> 3, "big"))
+            acc &= (1 << (n & 7)) - 1
+            n &= 7
+        self.acc, self.n = acc, n
 
     def _emit(self, chunk: bytes) -> None:
         self.out += chunk
@@ -157,32 +129,16 @@ class MsbWriter:
         return bytes(self.out)
 
 
-class LsbWriter:
-    """LSB-first bit writer; finished bytes accumulate in ``out``."""
+class LsbWriter(MsbWriter):
+    """LSB-first bit writer: values fill each byte from its low bit."""
 
-    __slots__ = ("out", "acc", "n")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
+    __slots__ = ()
 
     def write(self, value: int, k: int) -> None:
         acc = self.acc | ((value & ((1 << k) - 1)) << self.n)
         n = self.n + k
         if n >= 8:
-            nb = n >> 3
-            self.out += (acc & ((1 << (8 * nb)) - 1)).to_bytes(nb, "little")
-            acc >>= 8 * nb
+            self._emit((acc & ((1 << (n & ~7)) - 1)).to_bytes(n >> 3, "little"))
+            acc >>= n & ~7
             n &= 7
-        self.acc = acc
-        self.n = n
-
-    def align(self) -> None:
-        """Zero-pad to a byte boundary."""
-        if self.n:
-            self.write(0, 8 - self.n)
-
-    def getvalue(self) -> bytes:
-        self.align()
-        return bytes(self.out)
+        self.acc, self.n = acc, n

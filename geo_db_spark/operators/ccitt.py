@@ -19,10 +19,8 @@ Pure-Python decode (and fixture encoder twins) of:
   the previous row — the 2-D row grammar is byte-identical to T.6's,
   so the mode decoder below is shared.
 
-Bit order: MSB-first (operators/bitio.py's MsbReader/MsbWriter; tiff.py
-reverses FillOrder=2 strips before they get here). Decoding peeks 14
-bits as an integer and looks codes up by (length, code int); the
-encoder writes (code, length) pairs.
+Bit order: MSB-first (operators/bitio.py); decode looks codes up by
+(length, code int) on an integer peek.
 
 The code tables below are transcribed from the PUBLIC ITU-T T.4
 Recommendation (Tables 1-3) — tests pin structural soundness (both
@@ -348,18 +346,16 @@ def decode_g3(data: bytes, width: int, height: int, two_d: bool = False) -> byte
 # --------------------------------------------------------------- encoder
 
 
-def _code(bits: str) -> tuple[int, int]:
-    """A table codeword as the (value, length) pair MsbWriter.write takes."""
-    return int(bits, 2), len(bits)
+def _enc(table: dict) -> dict:
+    """key -> (code int, length), the arguments of MsbWriter.write."""
+    return {k: (int(c, 2), len(c)) for k, c in table.items()}
 
 
-_WHITE_ENC = ({r: _code(c) for r, c in WHITE_TERM.items()},
-              {r: _code(c) for r, c in WHITE_MAKEUP.items()})
-_BLACK_ENC = ({r: _code(c) for r, c in BLACK_TERM.items()},
-              {r: _code(c) for r, c in BLACK_MAKEUP.items()})
-_EXT_ENC = {r: _code(c) for r, c in EXT_MAKEUP.items()}
-_MODE_ENC = {m: _code(c) for c, m in MODE_CODES.items()}
-_EOL_CODE = _code(EOL)
+_WHITE_ENC = (_enc(WHITE_TERM), _enc(WHITE_MAKEUP))
+_BLACK_ENC = (_enc(BLACK_TERM), _enc(BLACK_MAKEUP))
+_EXT_ENC = _enc(EXT_MAKEUP)
+_MODE_ENC = _enc({m: c for c, m in MODE_CODES.items()})
+_EOL_CODE = (int(EOL, 2), len(EOL))
 
 
 def _emit_run(bw: MsbWriter, r: int, white: bool) -> None:

@@ -18,9 +18,9 @@ and CRC-16 frame checks. Out of scope (explicit NotImplementedError):
 12/20/32-bit sample sizes and unknown-total streams — honest
 boundaries per the repo convention.
 
-Performance note: the entropy layer is a Python bit reader, MSB-first
-(operators/bitio.py's MsbReader/MsbWriter; Rice codes are data-
-dependent, no batch kernel without a native library); the
+Performance note: the entropy layer is a Python MSB-first bit reader
+(operators/bitio.py; Rice codes are data-dependent, no batch kernel
+without a native library); the
 prediction recurrences run per subframe in numpy where order allows.
 Fixture/corpus-demo scale — the mapInPandas seam above is the real,
 tested contract, as with JPEG/PNG/GIF.
@@ -67,19 +67,16 @@ def _signed(rd: MsbReader, k: int) -> int:
 
 
 def _unary(rd: MsbReader) -> int:
-    """Count the zero bits before the next 1 and consume them with it,
-    16 bits per peek."""
+    """Zero bits before the next 1 (consumed with it), 16 per peek."""
     n = 0
-    while True:
-        w = rd.peek(16)
-        if w:
-            z = 16 - w.bit_length()
-            rd.skip(z + 1)
-            return n + z
+    while not rd.peek(16):
         rd.skip(16)
         n += 16
         if n > 1 << 20:
             raise ValueError("runaway unary code")
+    z = 16 - rd.peek(16).bit_length()
+    rd.skip(z + 1)
+    return n + z
 
 
 def _read_utf8_number(rd: MsbReader) -> int:

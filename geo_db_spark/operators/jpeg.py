@@ -25,9 +25,7 @@ mm_image_decode_jpeg workload oracle reproduce decoded pixels from
 text bytes in SQL (the lossy general path cannot be oracled that way;
 it is pinned in pytest against an independently-written IDCT).
 
-Bit order: entropy-coded data is MSB-first. The scan reader and writer
-are operators/bitio.py's MsbReader/MsbWriter; JPEG adds only 0xFF00
-byte stuffing, stop-at-marker, 1-bit padding and the restart check.
+Bit order: MSB-first (operators/bitio.py, plus JPEG's byte stuffing).
 
 Performance note: the entropy scan is a Python bit reader with a
 16-bit-peek Huffman lookup table (O(1) per symbol, the standard libjpeg
@@ -78,27 +76,17 @@ class _ScanReader(MsbReader):
     __slots__ = ()
 
     def _fill(self) -> None:
-        """Pull one more byte into the accumulator, or a PHANTOM 0xFF
-        when the next byte is a marker or the end of the stream — the
-        16-bit Huffman look-ahead may peek past the last real bit, but
-        consuming a phantom bit raises (MsbReader._consume)."""
-        if self.pos + 1 < len(self.buf):
-            b = self.buf[self.pos]
-            if b == 0xFF:
-                if self.buf[self.pos + 1] == 0x00:
-                    self.pos += 2  # stuffed 0xFF data byte
-                    self.acc = (self.acc << 8) | b
-                    self.n += 8
-                    return
-                # marker (RST or otherwise): do not consume
-            else:
-                self.pos += 1
-                self.acc = (self.acc << 8) | b
-                self.n += 8
-                return
-        self.acc = (self.acc << 8) | 0xFF
+        """Pull one more byte, de-stuffing 0xFF00; a marker or the end of
+        the stream appends phantom 1-bits instead (not consumable)."""
+        b = self.buf[self.pos] if self.pos + 1 < len(self.buf) else 0xFF
+        if b != 0xFF:
+            self.pos += 1
+        elif self.pos + 1 < len(self.buf) and self.buf[self.pos + 1] == 0x00:
+            self.pos += 2  # stuffed 0xFF data byte
+        else:
+            self.n_phantom += 8  # marker (not consumed) or end of stream
+        self.acc = (self.acc << 8) | b
         self.n += 8
-        self.n_phantom += 8
 
     def huff(self, lut) -> int:
         """One Huffman symbol via the 16-bit lookup table (peek 16,

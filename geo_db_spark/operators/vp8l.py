@@ -21,10 +21,8 @@ docs) — the r8 verdict's "most common remaining image format". Scope:
   exercise those decoder paths. Lossless, so decode(make_webp(x)) == x
   — which is what lets the workload query carry a full value oracle.
 
-Bit order: LSB-first (operators/bitio.py's LsbReader/LsbWriter), except
-that Huffman codes are stored most-significant code bit first: the
-decoder walks them one bit at a time and ``_write_code`` bit-reverses
-each code into one LSB-first write.
+Bit order: LSB-first (operators/bitio.py), but each Huffman code is
+stored most-significant code bit first (``_write_code``).
 
 Honest boundaries (NotImplementedError): lossy VP8, and VP8X extended
 containers whose image payload is lossy; a VP8X wrapping a VP8L chunk
