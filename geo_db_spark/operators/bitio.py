@@ -137,8 +137,8 @@ class LsbWriter(MsbWriter):
     def write(self, value: int, k: int) -> None:
         acc = self.acc | ((value & ((1 << k) - 1)) << self.n)
         n = self.n + k
-        if n >= 8:
-            self._emit((acc & ((1 << (n & ~7)) - 1)).to_bytes(n >> 3, "little"))
-            acc >>= n & ~7
-            n &= 7
+        while n >= 8:
+            self.out.append(acc & 0xFF)
+            acc >>= 8
+            n -= 8
         self.acc, self.n = acc, n

@@ -11,7 +11,7 @@ Scope: 8/16/24-bit PCM (r9 closed the non-16-bit boundary), 1-8
 independent channels plus the stereo left/side, right/side and
 mid/side decorrelations, CONSTANT / VERBATIM / FIXED (orders 0-4) /
 LPC (any order) subframes, Rice residual methods 0 and 1 with
-partitioning and escape codes, wasted rd, UTF-8 frame/sample
+partitioning and escape codes, wasted bits, UTF-8 frame/sample
 numbers, fixed AND variable blocking strategies (r9: variable-block
 sample numbers validated against the stream position), CRC-8 header
 and CRC-16 frame checks. Out of scope (explicit NotImplementedError):

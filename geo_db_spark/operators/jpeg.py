@@ -550,7 +550,7 @@ def _enc_codes(bits: bytes, symbols: bytes) -> dict:
 
 class _ScanWriter(MsbWriter):
     """MsbWriter that byte-stuffs every emitted 0xFF as 0xFF00 and pads
-    with 1-bits (T.81 F.1.2.3 / B.1.1.5)."""
+    with 1-bits."""
 
     __slots__ = ()
 

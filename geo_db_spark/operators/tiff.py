@@ -9,11 +9,11 @@ planes, §14's "StripsPerImage strips per component, component 0
 first" layout, tiles likewise), 8-bit samples, PhotometricInterpretation
 1 (grayscale BlackIsZero, widened to RGB), 2 (RGB) and 3 (palette via
 ColorMap), Compression 1 (none), 32773 (PackBits), 5 (TIFF-LZW —
-MSB-first codes through operators/bitio.py, 256=Clear/257=EOI, the spec's EarlyChange width bump
-one code early) and 4 (CCITT Group 4 via operators/ccitt.py),
-Predictor 2 (horizontal differencing — restarting per strip/tile row,
-which is why the undo runs per decompressed unit, not on the
-assembled raster). Multi-strip images honored via RowsPerStrip.
+MSB-first codes through operators/bitio.py, 256=Clear/257=EOI, the
+spec's EarlyChange width bump one code early) and 4 (CCITT Group 4 via
+operators/ccitt.py), Predictor 2 (horizontal differencing — restarting
+per strip/tile row, which is why the undo runs per decompressed unit,
+not on the assembled raster). Multi-strip images honored via RowsPerStrip.
 Honest NotImplementedError: 1/4/16-bit non-G4 samples, JPEG-in-TIFF
 compressions.
 
