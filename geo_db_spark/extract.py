@@ -329,8 +329,18 @@ def extract_all(
     class_tags: DataFrame,
     now_key: int = NOW_KEY_DEFAULT,
 ) -> dict[str, DataFrame]:
-    """Run the full phase-1 extraction: one cached entity DataFrame ->
-    the nine output tables of the reference's schema (setup.sql:8-75).
+    """Run the full phase-1 extraction: entities -> the nine output
+    tables of the reference's schema (setup.sql:8-75). Caches nothing;
+    ``pipeline.ingest`` persists the flagged frame the tables share (see
+    :func:`tables_from_flagged`)."""
+    return tables_from_flagged(with_class_flags(filter_defunct(entities), class_tags, now_key), now_key)
+
+
+def tables_from_flagged(flagged: DataFrame, now_key: int = NOW_KEY_DEFAULT) -> dict[str, DataFrame]:
+    """The nine output tables derived from the live, class-flagged
+    entities (``with_class_flags(filter_defunct(entities), ...)``); every
+    table reads ``flagged``, so a caller that materializes several tables
+    persists it first.
 
     Routing (B5, src/wiki_data_line.rs:428-459): an entity can take the
     country branch, the TE branch, the settlement branch and the language
@@ -347,9 +357,6 @@ def extract_all(
       distinct (SQLite UNIQUE semantics), so duplicate plain labels
       survive in the reference too — we keep them (post D5 dedups).
     """
-    live = filter_defunct(entities)
-    flagged = with_class_flags(live, class_tags, now_key).cache()
-
     te = flagged.filter(F.col("is_territorial_entities") & ~F.col("is_excluded"))
     settlement_all = flagged.filter(
         F.col("is_human_settlements")

@@ -144,6 +144,9 @@ def _cache_session_scoped(df: DataFrame) -> DataFrame:
     key = id(df.sparkSession)
     with _SIG_CACHE_LOCK:
         reg = _SIG_CACHE.setdefault(key, [])
+        # an older frame with the same plan shares df's cache entry:
+        # evicting it later would unpersist df too
+        reg[:] = [d for d in reg if not d.sameSemantics(df)]
         reg.append(df)
         while len(reg) > _SIG_CACHE_KEEP:
             reg.pop(0).unpersist(False)

@@ -190,11 +190,15 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 tc, th = seg[i] >> 4, seg[i] & 15
                 bits = seg[i + 1 : i + 17]
                 n = sum(bits)
+                if len(seg) < i + 17 + n:
+                    raise ValueError("truncated DHT (fewer symbols than its counts)")
                 symbols = seg[i + 17 : i + 17 + n]
                 (huff_dc if tc == 0 else huff_ac)[th] = _build_huff(bits, symbols)
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):
             # SOF0 baseline / SOF1 extended sequential / SOF2 progressive
+            if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+                raise ValueError("truncated SOF (fewer components than Nf)")
             prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
             if marker == 0xC0 and prec != 8:
                 raise ValueError(f"baseline JPEG must be 8-bit, got {prec}")
@@ -230,6 +234,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
+            if not seg or len(seg) < 4 + 2 * seg[0]:
+                raise ValueError("truncated SOS (fewer components than Ns)")
             ns = seg[0]
             scan = {}
             scan_order = []
@@ -237,13 +243,23 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 cs, tdta = seg[1 + 2 * c], seg[2 + 2 * c]
                 scan[cs] = (tdta >> 4, tdta & 15)
                 scan_order.append(cs)
+            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
+            ahal = seg[3 + 2 * ns]
+            # tables used: DC by a first DC scan, AC by an AC scan, both
+            # by a sequential one
+            dc_used = not frame["prog"] or (ss == 0 and ahal >> 4 == 0)
+            ac_used = not frame["prog"] or ss > 0
+            comp_ids = {c["id"] for c in frame["comps"]}
+            for cs, (td, ta) in scan.items():
+                if cs not in comp_ids:
+                    raise ValueError(f"scan names component {cs}, not in the frame")
+                if (dc_used and td not in huff_dc) or (ac_used and ta not in huff_ac):
+                    raise ValueError("scan names an undefined Huffman table")
             if not frame["prog"]:
                 return _decode_scan(
                     payload, pos + ln, frame, scan, qt, huff_dc, huff_ac,
                     restart_interval,
                 )
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
             _prog_scan(
                 payload, pos + ln, frame, scan, scan_order, ss, se,
                 ahal >> 4, ahal & 15, huff_dc, huff_ac, restart_interval,

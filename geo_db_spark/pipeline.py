@@ -4,8 +4,8 @@ src/main.rs:123-234 + src/post/mod.rs:4-198, as one Spark application).
 
 Storage layout at scale: each extracted table is written to parquet
 partitioned by nothing (they are id-keyed and modest) EXCEPT
-object_labels — the big skewed table — which benefits from being written
-bucketed/sorted by id if re-queried repeatedly. The write is the stage
+object_labels — the big skewed table — which could be written bucketed
+by id (plans/bucketing.py) if re-queried repeatedly. The write is the stage
 barrier the reference gets from SQLite; re-reading parquet gives every
 post stage pruned scans instead of recomputing the extraction DAG.
 """
@@ -15,7 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geo_db_spark.extract import class_sets_from_dict, extract_all
+from geo_db_spark.extract import (
+    class_sets_from_dict,
+    extract_all,
+    filter_defunct,
+    tables_from_flagged,
+    with_class_flags,
+)
 from geo_db_spark.functions.wiki_time import NOW_KEY_DEFAULT
 from geo_db_spark.plans.geo_post import post_process
 from geo_db_spark.sources.wikidata import read_entity_dump
@@ -32,59 +38,46 @@ def _as_class_tags(spark: SparkSession, class_sets) -> DataFrame:
     return class_sets_from_dict(spark, class_sets)
 
 
+def _write_tables(entities: DataFrame, tags: DataFrame, now_key: int, out_dir: str, mode: str) -> list[str]:
+    """Extract the nine tables, write each to ``out_dir/<name>`` and
+    return their names.
+
+    The one owner of the extraction's cache: it persists the parsed
+    entities (the class-flag self-join reads them on both sides; unpersisted
+    they are read and JSON-parsed twice) and the class-flagged frame every
+    table derives from, writes all nine tables, then unpersists both, so
+    nothing stays cached after a call."""
+    entities = entities.persist()
+    flagged = with_class_flags(filter_defunct(entities), tags, now_key).persist()
+    try:
+        tables = tables_from_flagged(flagged, now_key)
+        for name, df in tables.items():
+            df.write.mode(mode).parquet(f"{out_dir}/{name}")
+        return list(tables)
+    finally:
+        flagged.unpersist()
+        entities.unpersist()
+
+
 def ingest(
     spark: SparkSession,
     dump_path: str,
     class_sets,
     out_dir: str | None = None,
     now_key: int = NOW_KEY_DEFAULT,
-    bucket_tables: dict[str, int | tuple[str, int]] | None = None,
 ) -> dict[str, DataFrame]:
     """Phase 1 (reference src/main.rs:123-234): parse + extract the nine
     tables. With ``out_dir`` each table is persisted to parquet and
-    re-read (a durable stage barrier, replacing the SQLite sink A9).
-
-    ``bucket_tables`` maps table name -> bucket count (bucketed on
-    ``id``) or ``(key, bucket count)`` for tables keyed differently
-    (e.g. cities_countries on ``city``): those tables are written as
-    catalog BUCKETED tables (plans/bucketing.py) instead of plain
-    parquet — the right layout for object_labels, the big skewed table
-    every post-phase label stage re-joins by id (SQLite's covering
-    index, paid once at write time). The files land under
-    ``out_dir/<name>`` like every other table (external table; the
-    catalog only carries the bucket metadata). A key that doesn't exist
-    in the table raises immediately."""
+    re-read (a durable stage barrier, replacing the SQLite sink A9); the
+    frames cached for the writes are released before it returns
+    (:func:`_write_tables`). Without ``out_dir`` the tables stay lazy and
+    nothing is cached."""
     entities = read_entity_dump(spark, dump_path)
     tags = _as_class_tags(spark, class_sets)
-    if out_dir:
-        from geo_db_spark.plans.bucketing import write_bucketed
-
-        # the class-flag self-join scans `entities` on BOTH sides before
-        # extract_all's downstream cache exists — without this persist the
-        # dump is read+JSON-parsed twice (the dominant ingest cost; found
-        # by the A10 ticker metering 2x numInputRows per batch)
-        entities = entities.persist()
-        outs = extract_all(entities, tags, now_key)
-        persisted = {}
-        for name, df in outs.items():
-            spec = (bucket_tables or {}).get(name)
-            if spec:
-                bkey, n_buckets = ("id", spec) if isinstance(spec, int) else spec
-                if bkey not in df.columns:
-                    raise ValueError(
-                        f"bucket_tables[{name!r}]: key {bkey!r} not in "
-                        f"{df.columns}; pass (key, n_buckets)"
-                    )
-                table = f"geo_{name}"
-                write_bucketed(df, table, bkey, n_buckets, path=f"{out_dir}/{name}")
-                persisted[name] = spark.table(table)
-            else:
-                path = f"{out_dir}/{name}"
-                df.write.mode("overwrite").parquet(path)
-                persisted[name] = spark.read.parquet(path)
-        entities.unpersist()
-        return persisted
-    return extract_all(entities, tags, now_key)
+    if not out_dir:
+        return extract_all(entities, tags, now_key)
+    names = _write_tables(entities, tags, now_key, out_dir, "overwrite")
+    return {name: spark.read.parquet(f"{out_dir}/{name}") for name in names}
 
 
 def build_geo_db(
@@ -150,7 +143,8 @@ def stream_ingest(
     resumable HTTP read (src/input/http.rs:48-152): restart continues
     from the last committed batch, already-processed shards are never
     re-read. Call :func:`finalize_stream_ingest` after the stream stops
-    to apply the cross-batch PK rules.
+    to apply the cross-batch PK rules. Each batch caches only inside
+    :func:`_write_tables`, so a finished stream leaves nothing cached.
     """
     from geo_db_spark.sources.wikidata import parse_entity_lines
 
@@ -158,17 +152,7 @@ def stream_ingest(
     lines = spark.readStream.text(dump_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # persist the PARSED batch: the class-flag self-join otherwise
-        # re-reads and re-JSON-parses the shard (2x source rows on the
-        # A10 ticker); all nine writes complete inside this call, so the
-        # unpersist is safe
-        parsed = parse_entity_lines(batch_df).persist()
-        try:
-            outs = extract_all(parsed, tags, now_key)
-            for name, df in outs.items():
-                df.write.mode("append").parquet(f"{out_dir}/{name}")
-        finally:
-            parsed.unpersist()
+        _write_tables(parse_entity_lines(batch_df), tags, now_key, out_dir, "append")
 
     writer = (
         lines.writeStream.foreachBatch(write_batch)

@@ -12,6 +12,27 @@ import re
 from pyspark.sql import DataFrame
 
 
+def _own_plan(df: DataFrame) -> str:
+    """One line per node of the plan ``df`` itself runs, as planned before
+    execution: an adaptive plan contributes its initial plan, a cached
+    relation its scan node only (its cached plan prints as it stands in
+    the session cache, at indentations that do not nest)."""
+    lines, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.initialPlan())
+            continue
+        lines.append(node.simpleString(25))
+        if node.nodeName() == "InMemoryTableScan":
+            continue
+        for kids in (node.children(), node.innerChildren()):  # innerChildren: subqueries
+            it = kids.iterator()
+            while it.hasNext():
+                todo.append(it.next())
+    return "\n".join(lines)
+
+
 def plan_stats(df: DataFrame) -> dict:
     """Counts of the plan nodes that dominate cost at scale:
 
@@ -24,11 +45,12 @@ def plan_stats(df: DataFrame) -> dict:
     - ``python_nodes``: Arrow/Python evaluation nodes (MapInPandas,
       ArrowEvalPython, FlatMapGroupsInPandas...) — the deliberate slow
       path; pin so one never sneaks into a JVM-only query
-    - ``codegen_spans``: WholeStageCodegen regions (bigger spans = more
-      of the tree fused)
     - ``scans``: FileScan sources
+
+    Counted over ``_own_plan``, so a query's row depends neither on what
+    the session cached or ran before nor on whether the frame has run.
     """
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _own_plan(df)
     return {
         "exchanges": len(re.findall(r"Exchange (?!SinglePartition)(?:hashpartitioning|rangepartitioning|RoundRobinPartitioning)", plan))
         + len(re.findall(r"Exchange SinglePartition", plan)),
@@ -38,9 +60,5 @@ def plan_stats(df: DataFrame) -> dict:
             plan.count(n)
             for n in ("MapInPandas", "ArrowEvalPython", "FlatMapGroupsInPandas", "BatchEvalPython")
         ),
-        # codegen regions render as "*(N) Node" prefixes — and only once
-        # AQE has FINALIZED the plan (pre-execution adaptive plans show
-        # none), so treat this field as informational, not budgetable
-        "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))),
         "scans": plan.count("FileScan"),
     }

@@ -169,3 +169,15 @@ def get_spark(app_name: str = "geo_db_spark", shuffle_partitions: int | None = N
         k, _, v = kv.partition("=")
         builder = builder.config(k.strip(), v.strip())
     return tune(builder.getOrCreate())
+
+
+def smoke_session(app_name: str) -> SparkSession:
+    """The small-fixture session shared by the test suite and the plan
+    census (``python -m geo_db_spark.verify --write-census``): one
+    shuffle partition, AQE off at entry. Query constructors call tune(),
+    which turns AQE back on, so a query's plan is always planned with
+    AQE on."""
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    spark = get_spark(app_name, shuffle_partitions=1)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    return spark

@@ -3,18 +3,26 @@ on Spark and its oracle SQL on DuckDB over the same parquet tables, then
 compare row count, column names, and order-insensitive values.
 
 Used by tests/test_workload_oracle.py so regressions surface before the
-driver's per-round CORRECTNESS check.
+driver's per-round CORRECTNESS check. The same sweep records each
+query's plan row (``plan_stats`` before execution); the test holds every
+query to its row in ``tests/plan_census.json``, which
+``python -m geo_db_spark.verify --write-census`` rewrites.
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
 from dataclasses import dataclass, field
 
 import duckdb
 from pyspark.sql import SparkSession
 
 from geo_db_spark.io import TABLES
+from geo_db_spark.plans.report import plan_stats
+
+CENSUS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tests", "plan_census.json")
 
 
 @dataclass
@@ -24,6 +32,7 @@ class CompareResult:
     spark_rows: int = 0
     oracle_rows: int = 0
     errors: list[str] = field(default_factory=list)
+    plan: dict = field(default_factory=dict)
 
 
 def _norm_cell(v):
@@ -85,7 +94,6 @@ def dtype_mismatches(spark_pdf, oracle_pdf) -> list[str]:
 def canon_hazards(pdf) -> list[str]:
     """Cells the driver's pandas canonicalization cannot factorize (ndarray,
     list, dict) crash its check outright — the r2 mm_feature_extract incident.
-    Applies to rows-only queries too: the driver still canonicalizes them.
     """
     import pandas as pd
 
@@ -100,26 +108,44 @@ def canon_hazards(pdf) -> list[str]:
     return out
 
 
+def _spark_pandas(rows, schema, spark: SparkSession):
+    """The frame ``toPandas()`` would build, from rows already collected:
+    pyspark's per-column converters, structs as dicts (its Arrow path)."""
+    import pandas as pd
+    from pyspark.sql.pandas.types import _create_converter_to_pandas
+
+    names, tz = schema.names, spark.conf.get("spark.sql.session.timeZone")
+    pdf = pd.DataFrame.from_records(rows, index=range(len(rows)), columns=names) if rows else pd.DataFrame(columns=names)
+    convert = [
+        _create_converter_to_pandas(f.dataType, f.nullable, timezone=tz, struct_in_pandas="dict",
+                                    error_on_duplicated_field_names=False, timestamp_utc_localized=False)
+        for f in schema.fields
+    ]
+    return pd.concat([conv(col) for conv, (_, col) in zip(convert, pdf.items())], axis="columns")
+
+
 def compare_query(
     spark: SparkSession,
     con: duckdb.DuckDBPyConnection,
     name: str,
     fn,
-    sql: str | None,
+    sql: str,
     sf_dir: str,
 ) -> CompareResult:
+    """Run ``name`` once on each side and compare columns, row count,
+    normalized values, pandas dtype kinds and canon hazards: Spark runs
+    one ``collect()``; DuckDB materializes the oracle into a temp table
+    once and reads rows and pandas frame from it. ``res.plan`` is
+    ``plan_stats`` of the unexecuted frame, the row the plan census pins."""
     res = CompareResult(name=name, ok=True)
     sdf = fn(spark, sf_dir)
+    res.plan = plan_stats(sdf)
     s_rows = sdf.collect()
     s_cols = sdf.columns
     res.spark_rows = len(s_rows)
-    if sql is None:
-        haz = canon_hazards(sdf.toPandas())
-        if haz:
-            res.ok = False
-            res.errors.extend(haz)
-        return res
-    rel = con.sql(sql)
+    spark_pdf = _spark_pandas(s_rows, sdf.schema, spark)
+    con.execute(f"CREATE OR REPLACE TEMP TABLE __oracle AS {sql}")
+    rel = con.table("__oracle")
     o_cols = rel.columns
     o_rows = rel.fetchall()
     res.oracle_rows = len(o_rows)
@@ -140,8 +166,7 @@ def compare_query(
             res.errors.append(f"row {i}: spark={sn[i]} oracle={on[i]}")
     # Mirror the driver's pandas canonicalization: dtype-kind drift between the
     # two sides fails the driver's value hash even when fetchall values match.
-    spark_pdf = sdf.toPandas()
-    mism = dtype_mismatches(spark_pdf, con.sql(sql).fetchdf()) + canon_hazards(spark_pdf)
+    mism = dtype_mismatches(spark_pdf, rel.fetchdf()) + canon_hazards(spark_pdf)
     if mism:
         res.ok = False
         res.errors.extend(mism)
@@ -158,8 +183,42 @@ def run_all(spark: SparkSession, sf_dir: str, only: list[str] | None = None) -> 
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        # every query plans against an empty cache: its plan row is its
+        # cold plan, and the sweep does not pile up cached frames
+        spark.catalog.clearCache()
         try:
-            out.append(compare_query(spark, con, name, fn, oracles.get(name), sf_dir))
+            out.append(compare_query(spark, con, name, fn, oracles[name], sf_dir))
         except Exception as e:  # surface, don't abort the sweep
             out.append(CompareResult(name=name, ok=False, errors=[f"exception: {e}"]))
     return out
+
+
+def _write_census() -> None:
+    """Sweep every query over the oracle test's sf0.001 tables, in the
+    test suite's session, and write each plan row to
+    ``tests/plan_census.json``; writes nothing if any oracle fails."""
+    from geo_db_spark.session import smoke_session
+    from tests.conftest import SF_SMOKE
+
+    spark = smoke_session("plan_census")
+    try:
+        results = run_all(spark, SF_SMOKE)
+    finally:
+        spark.stop()
+    bad = [r for r in results if not r.ok]
+    for r in bad:
+        print(f"FAIL {r.name}: {r.errors[:2]}")
+    if bad:
+        raise SystemExit(f"{len(bad)} oracle(s) failed; census not written")
+    rows = sorted(f" {json.dumps(r.name)}: {json.dumps(r.plan)}" for r in results)
+    with open(CENSUS, "w") as f:  # one query per line: the diff reads per query
+        f.write("{\n" + ",\n".join(rows) + "\n}\n")
+    print(f"wrote {len(results)} rows to {CENSUS}")
+
+
+if __name__ == "__main__":
+    import sys
+
+    if sys.argv[1:] != ["--write-census"]:
+        raise SystemExit("usage: python -m geo_db_spark.verify --write-census")
+    _write_census()

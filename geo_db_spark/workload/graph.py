@@ -264,7 +264,7 @@ def g20_sssp_part_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # source collect below and the operator's symmetrize both
         # consume it, so the un-checkpointed lineage ran the lineitem
         # self-join + distinct TWICE (guide §2.4: remove redundant
-        # passes; measured in plans/r13)
+        # passes; measured on r13's plan dumps)
         .localCheckpoint(eager=True)
     )
     source = pairs.agg(F.min("a")).collect()[0][0]  # bounded driver scalar

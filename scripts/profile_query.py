@@ -6,7 +6,8 @@ Usage: python scripts/profile_query.py [--runs N] [--noop] [--plan-dir DIR] q1 q
 For each query: build the DataFrame, run it ``--runs`` times with the
 bench's xxhash64 full-evaluation force (or the noop sink with ``--noop``),
 print per-run walls, and (with ``--plan-dir``) write ``<name>.txt`` with
-the ``explain("formatted")`` output plus a one-line Exchange/node census.
+the ``explain("formatted")`` output under a one-line ``plan_stats`` row
+(the counts tests/plan_census.json pins).
 Jobs are labelled via setJobDescription so the timeline is attributable.
 """
 
@@ -14,7 +15,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import re
 import sys
 import time
 
@@ -38,6 +38,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from geo_db_spark import workload
+    from geo_db_spark.plans.report import plan_stats
     from geo_db_spark.session import get_spark
 
     spark = get_spark("profile_query")
@@ -64,16 +65,11 @@ def main() -> None:
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
             )
-            census = {
-                k: len(re.findall(k, plan))
-                for k in ("Exchange", "SinglePartition", "BatchEvalPython",
-                          "ArrowEvalPython", "SortMergeJoin", "BroadcastHashJoin",
-                          "ShuffledHashJoin", "Sort ")
-            }
+            stats = plan_stats(df)
             with open(os.path.join(args.plan_dir, f"{name}.txt"), "w") as f:
-                f.write(f"-- census: {census}\n")
+                f.write(f"-- plan_stats: {stats}\n")
                 f.write(plan)
-            print(f"{name}: plan -> {args.plan_dir}/{name}.txt  census={census}")
+            print(f"{name}: plan -> {args.plan_dir}/{name}.txt  plan_stats={stats}")
         walls = []
         if not args.runs:
             continue

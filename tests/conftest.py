@@ -15,12 +15,10 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def spark():
     # tiny fixture data: minimize per-job overhead (threads, shuffle
-    # partitions, adaptive re-planning). Production sessions use the
-    # defaults in geo_db_spark.session.
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    from geo_db_spark.session import get_spark
+    # partitions). Production sessions use the defaults in
+    # geo_db_spark.session.
+    from geo_db_spark.session import smoke_session
 
-    s = get_spark("geo_db_spark_tests", shuffle_partitions=1)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s = smoke_session("geo_db_spark_tests")
     yield s
     s.stop()

@@ -1,7 +1,9 @@
 """Truncated payloads fail loudly: every prefix of a seeded stream from
 each in-repo codec either decodes or raises ValueError /
 NotImplementedError — never IndexError or struct.error from a container
-walk or a bit reader running off the end."""
+walk or a bit reader running off the end. JPEG headers whose fields
+disagree with their segment (a count past the symbols present, a scan
+naming an undefined table) fail the same way."""
 
 from __future__ import annotations
 
@@ -18,6 +20,7 @@ from geo_db_spark.operators.ccitt import (
 )
 from geo_db_spark.operators.flac import decode_flac, make_flac
 from geo_db_spark.operators.jpeg import (
+    _entropy_end,
     decode_jpeg,
     make_jpeg,
     make_jpeg_gray_from_blocks,
@@ -68,3 +71,33 @@ def test_every_truncation_fails_loudly(name):
             decode(data[:cut])
         except (ValueError, NotImplementedError):
             pass
+
+
+def _header_offsets(data: bytes) -> list[int]:
+    """Byte offsets inside a JPEG stream's marker segments (lengths and
+    bodies; not the markers, not entropy-coded data)."""
+    out, pos = [], 2
+    while pos + 4 <= len(data):
+        marker = data[pos + 1]
+        if marker == 0xD9:
+            break
+        ln = int.from_bytes(data[pos + 2 : pos + 4], "big")
+        out.extend(range(pos + 2, pos + 2 + ln))
+        pos += 2 + ln
+        if marker == 0xDA:
+            pos = _entropy_end(data, pos)
+    return out
+
+
+@pytest.mark.parametrize("name", ["jpeg", "jpeg_prog", "jpeg12"])
+def test_jpeg_header_mutations_fail_loudly(name):
+    data, decode = _CASES[name]
+    rng = np.random.RandomState(11)
+    for pos in _header_offsets(data):
+        for v in rng.randint(0, 256, 4):
+            mutated = bytearray(data)
+            mutated[pos] = v
+            try:
+                decode(bytes(mutated))
+            except (ValueError, NotImplementedError):
+                pass

@@ -128,3 +128,23 @@ def test_build_geo_db_from_bz2_dump(spark, tmp_path):
     # languages table only holds rows for surviving cities; our cities
     # have no own languages -> empty
     assert finals["cities_languages"].count() == 0
+
+
+def test_ingest_leaves_nothing_cached(spark, tmp_path):
+    """ingest(out_dir=...) and a finished stream_ingest cache their parse
+    and flagged frame only while they write (each call, each batch)."""
+    from geo_db_spark.pipeline import ingest, stream_ingest
+
+    docs = _mini_dump()
+    shards = tmp_path / "shards"
+    shards.mkdir()
+    (shards / "part-0.json").write_text("[\n" + ",\n".join(docs[:4]) + ",\n")
+    (shards / "part-1.json").write_text(",\n".join(docs[4:]) + "\n]\n")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    ingest(spark, str(shards), CLASS_SETS, out_dir=str(tmp_path / "db"))
+    assert cache.isEmpty(), "ingest left frames cached"
+    q = stream_ingest(spark, str(shards), CLASS_SETS, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert q.awaitTermination(120), "stream_ingest did not finish"
+    assert cache.isEmpty(), "stream_ingest left frames cached"

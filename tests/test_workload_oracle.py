@@ -1,29 +1,33 @@
 """Mirror of the driver's correctness gate at sf0.001 (fast) — every
 workload query must match its DuckDB oracle on count, columns, and
-order-insensitive values."""
+order-insensitive values, and plan within its plan-census row."""
 
 from __future__ import annotations
+
+import json
 
 import pytest
 
 from geo_db_spark import workload
-from geo_db_spark.verify import run_all
+from geo_db_spark.plans.report import plan_stats
+from geo_db_spark.verify import CENSUS, run_all
 from tests.conftest import SF_SMOKE
 
 NAMES = sorted(workload.queries().keys())
 
+with open(CENSUS) as _f:
+    PLAN_CENSUS = json.load(_f)
 
-# Genuinely non-SQL-expressible ops (Pandas-batch math) would go here;
-# since r5 every declared query carries a full value oracle
-# (mm_feature_extract gained one via exact int64 chunk sums), so the
-# every-query-has-an-oracle assert runs at full strength.
-ROWS_ONLY: set[str] = set()
+# the census columns a query may not exceed: a stray shuffle, a new
+# single-partition funnel or a Python node in a JVM-only query
+BUDGETED = ("exchanges", "single_partition", "python_nodes")
 
 
 def test_every_query_has_oracle():
-    qs = workload.queries()
+    """Since r5 every declared query carries a full value oracle
+    (mm_feature_extract gained one via exact int64 chunk sums)."""
     oracles = workload.oracle_sql()
-    missing = [n for n in qs if n not in oracles and n not in ROWS_ONLY]
+    missing = [n for n in workload.queries() if n not in oracles]
     assert missing == [], f"queries without oracle: {missing}"
 
 
@@ -70,6 +74,32 @@ def test_query_matches_oracle(spark, name):
     r = results[0]
     assert r.ok, f"{name}: {r.errors}"
     assert r.spark_rows > 0, f"{name}: empty result"
+    row = PLAN_CENSUS[name]
+    over = {k: (r.plan[k], row[k]) for k in BUDGETED if r.plan[k] > row[k]}
+    assert not over, (
+        f"{name}: plan exceeds its census row (got, pinned): {over}. An "
+        "intended plan change reruns python -m geo_db_spark.verify "
+        "--write-census and commits the tests/plan_census.json diff."
+    )
+
+
+def test_census_rows_match_registry():
+    """One census row per registered query: a new query without a row
+    fails, and so does a row left behind by a removed query."""
+    assert sorted(PLAN_CENSUS) == NAMES
+
+
+def test_plan_stats_ignores_session_cache(spark):
+    """Repeated constructs of a query that caches its own sub-frames read
+    one plan row, and a frame reads the same row after it has run."""
+    fn = workload.queries()["dedup_minhash_lsh_pairs"]
+    spark.catalog.clearCache()
+    rows = [plan_stats(fn(spark, SF_SMOKE)) for _ in range(3)]
+    df = fn(spark, SF_SMOKE)
+    rows.append(plan_stats(df))
+    df.collect()
+    rows.append(plan_stats(df))
+    assert rows == [rows[0]] * 5, rows
 
 
 def test_registry_matches_declared_tally():
@@ -81,4 +111,4 @@ def test_registry_matches_declared_tally():
         f"registry has {len(qs)} queries but workload.N_QUERIES says "
         f"{workload.N_QUERIES} — update the constant (and README)"
     )
-    assert len(workload.oracle_sql()) == workload.N_QUERIES - len(ROWS_ONLY)
+    assert len(workload.oracle_sql()) == workload.N_QUERIES
