@@ -6,7 +6,7 @@ run set-based over ALL seeds at once instead of once per city
 (the reference drives it row-at-a-time, src/post/mod.rs:96-107 — the
 single biggest algorithmic win of the Spark rewrite, SURVEY.md §4).
 
-Two implementations:
+Three implementations:
 
 - ``transitive_closure`` (default): Spark's native recursive CTE
   (Spark >= 4.0, UNION ALL semantics) — ONE declarative plan, the engine
@@ -18,6 +18,13 @@ Two implementations:
   explode before the step bound (the loop's visited-set makes each node
   expand at most once per seed). Its rounds run through
   operators/rounds.py, one job per level.
+- ``transitive_closure_doubling``: path doubling (pointer jumping) over
+  the whole edge relation, with the loop's min-step, cycle-safe
+  semantics in ceil(log2 depth) self-join rounds instead of one round
+  per level. Use when the closure is iteration-latency-bound: seeds are
+  dense or the hierarchy is deep. Prefer the loop when seeds are a
+  sliver of a huge graph, since doubling shuffles the global relation
+  every round.
 
 Scale notes: the edge table of a real hierarchy (WikiData admin tree,
 ~1e6 edges) is broadcast-small next to the seed set; with broadcast edges

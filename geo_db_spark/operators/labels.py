@@ -41,19 +41,15 @@ def _lang_match(label_lang: Column, code: Column) -> Column:
     )
 
 
-def native_label_concat(
-    ids: DataFrame,
-    object_labels: DataFrame,
-    id_col: str = "id",
-    out_col: str = "native_label",
-) -> DataFrame:
-    """D5 (city_labels.sql:5-25 / subdivision_labels.sql): per id, the
-    ' / '-concat of DISTINCT labels with native_order <= 1. Concat order:
+def native_label_concat(ids: DataFrame, object_labels: DataFrame) -> DataFrame:
+    """D5 (city_labels.sql:5-25 / subdivision_labels.sql): per id of
+    ``ids`` (column ``id``), the ' / '-concat of DISTINCT labels with
+    native_order <= 1, as (id, native_label). Concat order:
     (min(native_order), label) — deterministic stand-in for SQLite's
     insertion-order GROUP_CONCAT."""
     lab = (
         object_labels.filter(F.col("native_order").isNotNull() & (F.col("native_order") <= 1))
-        .join(ids.select(F.col(id_col).alias("id")), "id", "left_semi")
+        .join(ids.select("id"), "id", "left_semi")
         .groupBy("id", "label")
         .agg(F.min("native_order").alias("mo"))
     )
@@ -62,8 +58,8 @@ def native_label_concat(
         lab.groupBy("id")
         .agg(F.sort_array(F.collect_list(packed)).alias("a"))
         .select(
-            F.col("id").alias(id_col),
-            F.array_join(F.transform("a", lambda s: s["__v"]), SEP).alias(out_col),
+            F.col("id"),
+            F.array_join(F.transform("a", lambda s: s["__v"]), SEP).alias("native_label"),
         )
     )
 
@@ -154,23 +150,23 @@ def resolve_labels_via_ancestors(
 
 
 def labels_by_country(
-    targets: DataFrame,
-    countries: DataFrame,
+    pairs: DataFrame,
     object_languages: DataFrame,
     languages: DataFrame,
     object_labels: DataFrame,
-    out_col: str = "native_label",
 ) -> DataFrame:
     """D7 (city_labels_by_country.sql / subdivision_labels_by_country.sql):
-    for each (target_id, owner_id, country) — owner is the entity whose
-    labels we read (the city itself, or its subdivision) — take the
-    country's rank-0 language (INNER: no primary language, no label) and
-    rank-1 language (LEFT), find the owner's label in each, and merge:
-    NULL-coalesce / equal-collapse / 'l1 / l2' (the iif pyramid,
-    city_labels_by_country.sql:6-18).
+    for each (owner, country) pair — owner is the entity whose labels we
+    read (a city with its country, or a subdivision with the country of
+    one of its cities) — take the country's rank-0 language (INNER: no
+    primary language, no label) and rank-1 language (LEFT), find the
+    owner's label in each, and merge: NULL-coalesce / equal-collapse /
+    'l1 / l2' (the iif pyramid, city_labels_by_country.sql:6-18).
 
-    ``targets`` columns: (target_id, owner, country).
-    Returns (target_id, out_col) — out_col may be NULL (kept: the
+    The label depends only on the pair, so one call serves city and
+    subdivision owners together; an id may come with several countries.
+    Returns (owner, country, label), one row per distinct pair whose
+    country has a rank-0 language — label may be NULL (kept: the
     reference's UPDATE writes NULL too).
     """
     def country_lang(rank: int, code_col: str) -> DataFrame:
@@ -216,7 +212,7 @@ def labels_by_country(
             .select(with_code["owner"].alias("__o"), F.col(code_col).alias("__c"), F.col("label").alias(out))
         )
 
-    t = targets.select("target_id", "owner", "country").dropDuplicates()
+    t = pairs.select("owner", "country").dropDuplicates()
     base = t.join(F.broadcast(country_lang(0, "code1")), "country")  # INNER
     base = base.join(F.broadcast(country_lang(1, "code2")), "country", "left")
 
@@ -239,24 +235,20 @@ def labels_by_country(
         .when(F.col("label1") == F.col("label2"), F.col("label1"))
         .otherwise(F.concat_ws(SEP, "label1", "label2"))
     )
-    return out.select("target_id", merged.alias(out_col))
+    return out.select("owner", "country", merged.alias("label"))
 
 
 EO_LANGS = ("eo", "fr", "es", "en", "de", "nl")
 
 
-def eo_label_pick(
-    ids: DataFrame,
-    object_labels: DataFrame,
-    id_col: str = "id",
-    out_col: str = "eo_label",
-) -> DataFrame:
-    """D8 (esperanto_city_labels.sql:5-21): among an id's labels with lang
-    in (eo fr es en de nl), prefer lang='eo'; non-eo winner made
-    deterministic by (lang, label) — documented divergence from SQLite's
-    arbitrary pick."""
+def eo_label_pick(ids: DataFrame, object_labels: DataFrame) -> DataFrame:
+    """D8 (esperanto_city_labels.sql:5-21 / esperanto_subdivision_labels.sql):
+    per id of ``ids`` (column ``id``; duplicates are harmless), as
+    (id, eo_label): among the id's labels with lang in (eo fr es en de
+    nl), prefer lang='eo'; non-eo winner made deterministic by (lang,
+    label) — documented divergence from SQLite's arbitrary pick."""
     lab = object_labels.filter(F.col("lang").isin(*EO_LANGS)).join(
-        ids.select(F.col(id_col).alias("id")), "id", "left_semi"
+        ids.select("id"), "id", "left_semi"
     )
     w = Window.partitionBy("id").orderBy(
         (F.col("lang") == "eo").desc(),
@@ -267,5 +259,5 @@ def eo_label_pick(
     return (
         lab.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select(F.col("id").alias(id_col), F.col("label").alias(out_col))
+        .select("id", F.col("label").alias("eo_label"))
     )

@@ -7,10 +7,14 @@ the reference mutates `cities` in place (ALTER/UPDATE); here every stage
 derives a new DataFrame, and the stage ordering carries the same data
 dependencies (e.g. D7 only fills what D6 left NULL).
 
-The two row-at-a-time loops (per_city.sql, per_subdivision.sql driven by
-src/post/mod.rs:96-107) are replaced by ONE set-based resolve for both —
-a seed's label depends only on the seed — over ONE ancestor closure that
-D3 shares; see geo_db_spark.operators.labels.
+The reference runs each label stage twice, once keyed by city id and
+once by subdivision id (2nd_id). Here D6, D7 and D8 each run ONE
+set-based resolve for both key sets — a label depends only on its key
+(D6: the seed; D7: the (owner, country) pair; D8: the id) — and join
+the result back by each key. D6 replaces the two row-at-a-time loops
+(per_city.sql, per_subdivision.sql driven by src/post/mod.rs:96-107) and
+walks ONE ancestor closure that D3 shares; see
+geo_db_spark.operators.labels.
 
 Determinism: all SQLite arbitrary-winner spots carry documented
 tiebreaks (see operators/labels.py docstring and inline notes below).
@@ -45,7 +49,7 @@ from geo_db_spark.operators.labels import (
     native_label_concat,
     resolve_labels_via_ancestors,
 )
-from geo_db_spark.operators.relational import anti_join, dedup_by_key, semi_join
+from geo_db_spark.operators.relational import dedup_by_key, semi_join
 from geo_db_spark.operators.rounds import checkpoint_round
 
 # the reference's recursion bound (find_subdivision.sql, per_city.sql:
@@ -53,13 +57,13 @@ from geo_db_spark.operators.rounds import checkpoint_round
 MAX_STEPS = 100
 
 
-def _fill(df: DataFrame, updates: DataFrame, key: str, col: str) -> DataFrame:
-    """UPDATE df SET col = <updates' 2nd column> WHERE df.key = <updates'
-    1st column>, only filling NULLs (stage semantics: later label stages
-    only touch rows earlier stages left unresolved)."""
-    u = updates.toDF(key, "__new")
+def _fill(df: DataFrame, updates: DataFrame, keys: list[str], col: str) -> DataFrame:
+    """UPDATE df SET col = <updates' last column> WHERE df.keys = <updates'
+    leading columns>, only filling NULLs (stage semantics: later label
+    stages only touch rows earlier stages left unresolved)."""
+    u = updates.toDF(*keys, "__new")
     return (
-        df.join(u, key, "left")
+        df.join(u, keys, "left")
         .withColumn(col, F.coalesce(F.col(col), F.col("__new")))
         .drop("__new")
     )
@@ -125,18 +129,24 @@ def post_process(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         )
     )
 
-    # ---- city_labels.sql (D5) ---------------------------------------
-    # native-label concat per CITY id; also reused by subdivision_labels
-    # (the reference's labels_inner scans `cities`, so only subdivisions
-    # that are themselves cities are covered there — faithful quirk)
+    # The subdivision stages below read only 2nd_id, 2nd_native_label and
+    # country, and the city D7/D8 stages write only native_label and
+    # eo_label, so each city stage can run side by side with its
+    # subdivision twin: D5, D6, D7 and D8 each resolve both key sets once.
+
+    # ---- city_labels.sql + subdivision_labels.sql (D5) --------------
+    # native-label concat per CITY id, keyed by id and by 2nd_id (the
+    # reference's labels_inner scans `cities`, so only subdivisions that
+    # are themselves cities are covered there — faithful quirk)
     city_native, _ = checkpoint_round(native_label_concat(cities.select("id"), object_labels))
-    cities = cities.join(city_native, "id", "left")
+    cities = cities.join(city_native, "id", "left").join(
+        city_native.toDF("2nd_id", "2nd_native_label"), "2nd_id", "left"
+    )
 
     # ---- per_city.sql + per_subdivision.sql loops (D6, one resolve) --
     # seeds: cities with no D5 label, and subdivisions with no D5 label
-    # (2nd_native_label is filled only from city_native before D6)
-    unlabeled = cities.filter(F.col("native_label").isNull()).select("id").unionByName(
-        anti_join(cities.select(F.col("2nd_id").alias("id")).dropna(), city_native, "id")
+    unlabeled = cities.filter(F.col("native_label").isNull()).select("id").union(
+        cities.filter(F.col("2nd_native_label").isNull()).select("2nd_id").dropna()
     )
     resolved, _ = checkpoint_round(
         resolve_labels_via_ancestors(
@@ -144,59 +154,38 @@ def post_process(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
             object_languages, languages, object_labels,
         )
     )
-    cities = _fill(cities, resolved, "id", "native_label")
+    cities = _fill(cities, resolved, ["id"], "native_label")
+    cities, _ = checkpoint_round(_fill(cities, resolved, ["2nd_id"], "2nd_native_label"))
 
-    # ---- city_labels_by_country.sql (D7) ----------------------------
-    targets = (
-        cities.filter(F.col("native_label").isNull() & F.col("country").isNotNull())
-        .select(F.col("id").alias("target_id"), F.col("id").alias("owner"), "country")
-    )
-    by_country = labels_by_country(
-        targets, countries, object_languages, languages, object_labels,
-        out_col="native_label",
-    )
-    cities, _ = checkpoint_round(_fill(cities, by_country, "id", "native_label"))
-
-    # ---- esperanto_city_labels.sql (D8) -----------------------------
-    cities = cities.join(eo_label_pick(cities.select("id"), object_labels), "id", "left")
-
-    # ---- subdivision_labels.sql (D5 keyed by 2nd_id) ----------------
-    cities = cities.join(
-        city_native.select(
-            F.col("id").alias("2nd_id"), F.col("native_label").alias("2nd_native_label")
-        ),
-        "2nd_id",
-        "left",
-    )
-
-    # ---- per_subdivision.sql loop (D6, resolved above) --------------
-    cities = _fill(cities, resolved, "2nd_id", "2nd_native_label")
-
-    # ---- subdivision_labels_by_country.sql (D7 keyed by 2nd_id) -----
-    # the reference takes the country of an ARBITRARY city of the
-    # subdivision (DISTINCT "2nd_id" over a multi-country set) — we take
-    # MIN(country) per 2nd_id [documented tiebreak]
-    sub_targets = (
-        cities.filter(F.col("2nd_native_label").isNull() & F.col("2nd_id").isNotNull() & F.col("country").isNotNull())
+    # ---- city_labels_by_country.sql + subdivision_labels_by_country.sql (D7)
+    # pairs: each unlabeled city with its country, and each unlabeled
+    # subdivision with MIN(country) of its unlabeled cities — the
+    # reference takes the country of an ARBITRARY city of the subdivision
+    # (DISTINCT "2nd_id" over a multi-country set) [documented tiebreak].
+    # An id that is both a city and a subdivision may come with two
+    # countries, so both fills key on (owner, country).
+    has_country = F.col("country").isNotNull()
+    city_pairs = cities.filter(F.col("native_label").isNull() & has_country).select("id", "country")
+    sub_pairs = (
+        cities.filter(F.col("2nd_native_label").isNull() & F.col("2nd_id").isNotNull() & has_country)
         .groupBy("2nd_id")
         .agg(F.min("country").alias("country"))
-        .select(F.col("2nd_id").alias("target_id"), F.col("2nd_id").alias("owner"), "country")
     )
-    sub_by_country = labels_by_country(
-        sub_targets, countries, object_languages, languages, object_labels,
-        out_col="2nd_native_label",
+    by_country, _ = checkpoint_round(
+        labels_by_country(
+            city_pairs.union(sub_pairs).toDF("owner", "country"),
+            object_languages, languages, object_labels,
+        )
     )
-    cities, _ = checkpoint_round(_fill(cities, sub_by_country, "2nd_id", "2nd_native_label"))
+    sub_labels = sub_pairs.join(
+        by_country.toDF("2nd_id", "country", "label"), ["2nd_id", "country"]
+    ).drop("country")
+    cities = _fill(cities, by_country, ["id", "country"], "native_label")
+    cities, _ = checkpoint_round(_fill(cities, sub_labels, ["2nd_id"], "2nd_native_label"))
 
-    # ---- esperanto_subdivision_labels.sql ---------------------------
-    sub_eo = eo_label_pick(
-        cities.filter(F.col("2nd_id").isNotNull()).select(F.col("2nd_id").alias("id")).distinct(),
-        object_labels,
-        out_col="2nd_eo_label",
-    )
-    cities = cities.join(
-        sub_eo.select(F.col("id").alias("2nd_id"), "2nd_eo_label"), "2nd_id", "left"
-    )
+    # ---- esperanto_city_labels.sql + esperanto_subdivision_labels.sql (D8)
+    eo = eo_label_pick(cities.select("id").union(cities.select("2nd_id").dropna()), object_labels)
+    cities = cities.join(eo, "id", "left").join(eo.toDF("2nd_id", "2nd_eo_label"), "2nd_id", "left")
 
     # ---- subdivision_iso.sql (D9) -----------------------------------
     cities = cities.join(

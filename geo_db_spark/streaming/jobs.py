@@ -10,6 +10,8 @@ a readStream DataFrame (production).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -278,10 +280,27 @@ def maintain_windowed_rollup(
     maintenance resumable: a restarted job continues from the last
     committed batch instead of reprocessing the stream.
     """
-    agg = windowed_event_counts(stream, watermark=watermark)
+    return _overwrite_sink(
+        windowed_event_counts(stream, watermark=watermark), out_dir, checkpoint_dir, available_now
+    )
 
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        df.write.mode("overwrite").parquet(out_dir)
+
+def _overwrite_sink(
+    agg: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    per_batch: Callable[[DataFrame], DataFrame] | None = None,
+):
+    """The rollup-maintenance sink of maintain_windowed_rollup and the
+    run_streaming_* jobs: run the streaming aggregate ``agg`` in complete
+    mode and overwrite ``out_dir`` with each micro-batch (after
+    ``per_batch(batch_df)`` when given), checkpointed in
+    ``checkpoint_dir``; ``available_now`` drains what is there and stops."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        out = per_batch(batch_df) if per_batch else batch_df
+        out.write.mode("overwrite").parquet(out_dir)
 
     writer = (
         agg.writeStream.foreachBatch(write_batch)
@@ -437,20 +456,10 @@ def run_streaming_hll(
     overwrites ``out_dir`` with the current per-type estimates (the
     rollup-maintenance sink pattern of maintain_windowed_rollup)."""
     ev = read_events_stream(spark, events_dir, max_files_per_trigger=max_files_per_trigger)
-    regs = streaming_hll_registers(ev)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        est = hll_estimate_from_registers(batch_df)
-        est.write.mode("overwrite").parquet(out_dir)
-
-    writer = (
-        regs.writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
+    return _overwrite_sink(
+        streaming_hll_registers(ev), out_dir, checkpoint_dir, available_now,
+        per_batch=hll_estimate_from_registers,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_apply_changes(
@@ -622,19 +631,7 @@ def run_streaming_cms(
     overwrites ``out_dir`` with the current counter cells (the same
     rollup-maintenance sink pattern as run_streaming_hll)."""
     ev = read_events_stream(spark, events_dir, max_files_per_trigger=max_files_per_trigger)
-    cells = streaming_cms_cells(ev)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    writer = (
-        cells.writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _overwrite_sink(streaming_cms_cells(ev), out_dir, checkpoint_dir, available_now)
 
 
 def streaming_moments(events: DataFrame, group_col: str = "event_type") -> DataFrame:
@@ -671,19 +668,7 @@ def run_streaming_moments(
     rollup-maintenance sink pattern). The sink rows feed the same
     overflow-safe double comparison the batch gate uses."""
     ev = read_events_stream(spark, events_dir, max_files_per_trigger=max_files_per_trigger)
-    mom = streaming_moments(ev)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    writer = (
-        mom.writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _overwrite_sink(streaming_moments(ev), out_dir, checkpoint_dir, available_now)
 
 
 def sessionize_builtin(

@@ -184,17 +184,17 @@ FROM top2
 
 def x10_labels_by_country(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D7 (city_labels_by_country.sql / subdivision_labels_by_country.sql):
-    per target, the owner's label in the country's rank-0 language (INNER:
-    no primary language, no row) merged with its label in the rank-1
-    language (LEFT) via the NULL-coalesce / equal-collapse / concat
-    pyramid. NULL results are KEPT (the reference's UPDATE writes NULL)."""
+    per (owner, country) pair — each customer with its nation — the
+    owner's label in the country's rank-0 language (INNER: no primary
+    language, no row) merged with its label in the rank-1 language (LEFT)
+    via the NULL-coalesce / equal-collapse / concat pyramid, output as
+    (target_id, native_label). NULL results are KEPT (the reference's
+    UPDATE writes NULL)."""
     tune(spark)
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     ck, nk = F.col("c_custkey"), F.col("n_nationkey")
-    targets = cust.select(
-        ck.alias("target_id"), ck.alias("owner"), F.col("c_nationkey").alias("country")
-    )
+    pairs = cust.select(ck.alias("owner"), F.col("c_nationkey").alias("country"))
     object_languages = (
         nation.filter(nk % 4 != 1)
         .select(nk.alias("id"), (nk % 25).alias("lang_id"), F.lit(0).alias("lang_index"))
@@ -234,11 +234,8 @@ def x10_labels_by_country(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    countries = nation.select(nk.alias("id"))
-    out = labels_by_country(
-        targets, countries, object_languages, _languages(spark, sf_dir), object_labels
-    )
-    return out.select("target_id", "native_label")
+    out = labels_by_country(pairs, object_languages, _languages(spark, sf_dir), object_labels)
+    return out.select(F.col("owner").alias("target_id"), F.col("label").alias("native_label"))
 
 
 _X10_MATCH = (

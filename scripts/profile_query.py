@@ -5,10 +5,12 @@ Usage: python scripts/profile_query.py [--runs N] [--noop] [--plan-dir DIR] q1 q
 
 For each query: build the DataFrame, run it ``--runs`` times with the
 bench's xxhash64 full-evaluation force (or the noop sink with ``--noop``),
-print per-run walls, and (with ``--plan-dir``) write ``<name>.txt`` with
-the ``explain("formatted")`` output under a one-line ``plan_stats`` row
-(the counts tests/plan_census.json pins).
-Jobs are labelled via setJobDescription so the timeline is attributable.
+print per-run walls, jobs, stages and busy share, and (with
+``--plan-dir``) write ``<name>.txt`` with the ``explain("formatted")``
+output under a one-line ``plan_stats`` row (the counts
+tests/plan_census.json pins).
+Each run is one ``perfbench.spans.Tracer`` span: its own Spark job group
+(so the timeline is attributable), counted from the status store.
 """
 
 from __future__ import annotations
@@ -16,7 +18,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -40,8 +41,10 @@ def main() -> None:
     from geo_db_spark import workload
     from geo_db_spark.plans.report import plan_stats
     from geo_db_spark.session import get_spark
+    from perfbench.spans import Tracer
 
     spark = get_spark("profile_query")
+    tracer = Tracer(spark, cores=spark.sparkContext.defaultParallelism)
     qs = workload.queries()
 
     def force(df):
@@ -70,30 +73,20 @@ def main() -> None:
                 f.write(f"-- plan_stats: {stats}\n")
                 f.write(plan)
             print(f"{name}: plan -> {args.plan_dir}/{name}.txt  plan_stats={stats}")
-        walls = []
         if not args.runs:
             continue
-
-        def _njobs():
-            # r13: submitted-job counter (DAGScheduler.numTotalJobs) —
-            # the per-run delta shows the scheduler round-trips a query
-            # pays, the thing the lazy-checkpoint reworks remove
-            try:
-                return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
-            except Exception:
-                return -1
-
-        jobs = []
+        runs = []
         for i in range(args.runs):
-            spark.sparkContext.setJobDescription(f"{name} run{i}")
-            j0 = _njobs()
-            t0 = time.perf_counter()
-            n = force(fn(spark, args.sf_dir))
-            walls.append(round(time.perf_counter() - t0, 3))
-            j1 = _njobs()
-            jobs.append(j1 - j0 if (j0 >= 0 and j1 >= 0) else -1)
-            spark.sparkContext.setJobDescription(None)
-        print(f"{name}: walls={walls} min={min(walls)} jobs={jobs} rows={n} loadavg={os.getloadavg()[0]:.2f}")
+            with tracer.span(f"{name} run{i}") as rec:
+                n = force(fn(spark, args.sf_dir))
+            runs.append(rec)
+        walls = [round(r["wall_s"], 3) for r in runs]
+        print(
+            f"{name}: walls={walls} min={min(walls)} jobs={[r['jobs'] for r in runs]} "
+            f"stages={[r['stages'] for r in runs]} "
+            f"busy={[round(r['busy_share'], 2) for r in runs]} rows={n} "
+            f"loadavg={os.getloadavg()[0]:.2f}"
+        )
         if args.gc:
             import gc
 

@@ -285,3 +285,32 @@ def test_post_process_fixture_pin(spark):
     assert cities == PIN_CITIES
     assert labels == PIN_LABELS
     assert langs == PIN_LANGS
+
+
+# An id that is both a city and a subdivision, with different countries
+# for its two roles: QT10 (is_2nd, country Q2) is its own 2nd and QC11's
+# (country Q1). D7 resolves QT10 as a city in Q2's beta and as a
+# subdivision in MIN(country) = Q1's alpha, so a D7 merge keyed by the
+# owner alone would give QT10 duplicate or wrong labels.
+CITY_AND_SUBDIVISION = {
+    "territorial_entities": [("QT10", 1, "X-10")],
+    "territorial_entities_parents": [("QC11", "QT10")],
+    "cities": [("QT10", None, 100, None, None), ("QC11", None, 110, None, None)],
+    "cities_countries": [("QT10", 0, "Q2"), ("QC11", 0, "Q1")],
+    "object_labels": [
+        ("QT10", "alpha", None, "TenAlpha"),
+        ("QT10", "beta", None, "TenBeta"),
+        ("QC11", "alpha", 0, "CityEleven"),
+    ],
+}
+PIN_CITY_AND_SUBDIVISION = [
+    ("QC11", "aa", 110, None, None, "QT10", "CityEleven", None, "TenAlpha", None, "X-10"),
+    ("QT10", "bb", 100, None, None, "QT10", "TenBeta", None, "TenAlpha", None, "X-10"),
+]
+
+
+def test_post_process_city_that_is_a_subdivision(spark):
+    from geo_db_spark.plans.geo_post import post_process
+
+    cities, _, _ = _sorted_outputs(post_process(_spark_tables(spark, CITY_AND_SUBDIVISION)))
+    assert [r for r in cities if r[0] in ("QT10", "QC11")] == PIN_CITY_AND_SUBDIVISION
